@@ -9,8 +9,10 @@ import Num._
   * compositions over Silver (a reference `CREATE OR REPLACE VIEW` is a stored
   * lazy plan — exactly a Scala function of DataFrames, SURVEY.md §3.3).
   *
-  * Each takes pre-built silver inputs so callers can reuse one silver plan
-  * across several gold outputs instead of recomputing it.
+  * Each takes its silver inputs as frames and never derives them itself. The
+  * pipelines pass the `silver_*` tables they wrote (a view over the refined
+  * tables, as in the reference); the registry passes the from-source silver
+  * plans.
   */
 object Gold {
 

@@ -16,9 +16,13 @@ import graft.sources.Sinks
   *
   * The reference fans out to child notebooks via `dbutils.notebook.run`
   * (a job boundary per stage, SURVEY.md §3.1); here every stage is a plain
-  * function in one SparkSession, so Catalyst optimizes across stage
-  * boundaries and the "IR between stages" is a DataFrame instead of a temp
-  * view name. Gating matches the reference: DDL + critical facts fail fast,
+  * function in one SparkSession. Like the reference, each layer reads the
+  * tables the layer below WROTE: bronze reads the raw files, silver reads
+  * the written `bronze_*` tables and gold the written `silver_*` tables,
+  * all through [[Quality.warehouseTables]] — the same resolver the DQ stage
+  * audits through. No stage re-derives a layer it does not write, so the
+  * lineitem dedup and the RFM quintiles run once per pipeline, not once per
+  * consumer. Gating matches the reference: DDL + critical facts fail fast,
   * everything else records its error and continues; a failure summary is
   * raised at the end (run_sales_analytics.py:143-164).
   *
@@ -126,26 +130,31 @@ object Pipeline {
     results += st("bronze_part", critical = false)(Bronze.part(spark, dir))
     results += st("bronze_orders", critical = true)(Bronze.orders(spark, dir))
     results += st("bronze_lineitem", critical = true)(Bronze.lineitem(spark, dir))
-    // close the optimizer loop BEFORE the join-heavy silver/gold stages:
     // profile the source tables this pipeline reads and install the
-    // statistics catalog on the session, so every PLAIN join below plans
-    // against measured row counts instead of the file-size heuristic
-    // (VERDICT r9 #7 — StatsHintRule existed but production never
-    // installed a profile). Non-critical: a failed profile leaves the
+    // statistics catalog on the session: any PLAIN join over those tables
+    // then plans against measured row counts instead of the file-size
+    // heuristic. The silver/gold joins below read the written bronze_* and
+    // silver_* tables, which the profile has no entry for, so they keep
+    // Spark's own decision. Non-critical: a failed profile leaves the
     // session planning exactly as before.
     results += st("stats_profile_install", critical = false)(
       installStatsProfile(spark, dir, Seq("orders", "lineitem", "customer")))
-    // silver (run_sales_analytics.py:109-114)
-    val od = Silver.orderDetails(spark, dir)
+    // silver over the written bronze tables (run_sales_analytics.py:109-114)
+    val written = Quality.warehouseTables(spark, outDir)
     results += st("silver_order_details", critical = true,
-      partitionBy = Seq("order_year"))(od)
+      partitionBy = Seq("order_year"))(Silver.orderDetails(written))
     results += st("silver_customer_orders", critical = true)(
-      Silver.customerOrders(spark, dir))
-    // gold views-on-silver (run_sales_analytics.py:123-125; no gate)
+      Silver.customerOrders(written))
+    // gold views over the written silver tables (run_sales_analytics.py:123-125;
+    // no gate). Region/nation/segment come from customer_orders, the
+    // reference's join: every fact row's customer has an order, so it is in
+    // customer_orders exactly when it is in the customer geography.
+    def od = written("order_details")
+    def co = written("customer_orders")
     results += st("gold_revenue_by_region", critical = false)(
-      Gold.revenueByRegion(od, Silver.customerGeo(spark, dir)))
+      Gold.revenueByRegion(od, co))
     results += st("gold_customer_lifetime_value", critical = false)(
-      Gold.customerLifetimeValue(Silver.customerOrders(spark, dir), od))
+      Gold.customerLifetimeValue(co, od))
     results += st("gold_monthly_sales_trends", critical = false)(
       Gold.monthlySalesTrends(od))
     // quality (run_sales_analytics.py:134) — ALL FIVE families
@@ -329,16 +338,14 @@ object Pipeline {
     val n =
       if (Versioned.latestTag(spark, path).contains(tag)) 0L
       else {
+        // one fused pass per table; the zero states keep every profiled
+        // column present when a table's delta is empty
         val delta = Sketch.ProfiledColumns.groupBy(_._1).toSeq.sortBy(_._1)
-          .flatMap { case (t, cols) =>
-            val df = deltas(t)
-            cols.map { case (_, c) => Sketch.statsState(df, t, c) }
-          }.reduce(_ unionByName _)
-        val merged = (Versioned.latestVersion(spark, path) match {
-          case Some(_) =>
-            Sketch.mergeStatsStates(Seq(Versioned.read(spark, path), delta))
-          case None => Sketch.mergeStatsStates(Seq(delta))
-        }).persist()
+          .map { case (t, cols) => Sketch.statsStates(deltas(t), t, cols.map(_._2)) } :+
+          Sketch.zeroStatesFor(spark, Sketch.ProfiledColumns)
+        val merged = Sketch.mergeStatsStates(
+          Versioned.latestVersion(spark, path).map(_ => Versioned.read(spark, path)).toSeq ++
+            delta).persist()
         val rows = merged.count()
         Versioned.write(merged, path, Some(tag))
         merged.unpersist()
@@ -360,25 +367,23 @@ object Pipeline {
     * source tables and install it on the session
     * ([[graft.plans.StatsHint]]), returning the profile frame so the
     * pipeline stage materializes it as an auditable warehouse table. One
-    * stats pass per profiled column (counts/min/max/KMV — no exact-NDV
-    * audit arm); the collect inside install is control-plane (one row per
+    * fused stats pass per table ([[graft.ext.Sketch.statsStates]]:
+    * counts/min/max/KMV of every profiled column — no exact-NDV audit arm),
+    * merged with the zero states so an empty table still reports
+    * `n_rows = 0`; the collect inside install is control-plane (one row per
     * profiled column). Batch pipelines re-measure per run; a deployment
     * with maintained stats calls [[runStatsIncrement]](installHints=true)
     * instead and pays O(delta), not a rescan. */
   private def installStatsProfile(spark: SparkSession, dir: String,
                                   tables: Seq[String]): DataFrame = {
     import graft.ext.Sketch
-    def src(t: String): DataFrame = t match {
-      case "orders" => Sources.orders(spark, dir)
-      case "lineitem" => Sources.lineitem(spark, dir)
-      case "customer" => Sources.customer(spark, dir)
-      case "events" => Sources.events(spark, dir)
-      case other => sys.error(s"unprofiled table $other")
+    val profiled = Sketch.ProfiledColumns.filter(p => tables.contains(p._1))
+    val states = profiled.map(_._1).distinct.map { t =>
+      Sketch.statsStates(Sketch.sliceSource(spark, dir, t)._1, t,
+        profiled.collect { case (`t`, c) => c })
     }
-    val prof = Sketch.finalizeStats(
-      Sketch.ProfiledColumns.filter(p => tables.contains(p._1))
-        .map { case (t, c) => Sketch.statsState(src(t), t, c) }
-        .reduce(_ unionByName _))
+    val prof = Sketch.finalizeStats(Sketch.mergeStatsStates(
+      states :+ Sketch.zeroStatesFor(spark, profiled)))
     graft.plans.StatsHint.install(spark, prof)
     prof
   }
@@ -400,22 +405,22 @@ object Pipeline {
     results += st("bronze_part", critical = true)(Bronze.part(spark, dir))
     results += st("bronze_orders", critical = false)(Bronze.orders(spark, dir))
     results += st("bronze_lineitem", critical = false)(Bronze.lineitem(spark, dir))
-    // same optimizer-loop close as the sales pipeline: profile the fact
-    // tables this pipeline joins (supplier/part are unprofiled — the rule
-    // leaves their joins to Spark's own decision)
+    // same profile install as the sales pipeline, over the fact tables
+    // (supplier/part are unprofiled)
     results += st("stats_profile_install", critical = false)(
       installStatsProfile(spark, dir, Seq("orders", "lineitem")))
-    // refined (run_supplier_analytics.py:100-102)
-    val od = Silver.orderDetails(spark, dir)
-    results += st("silver_order_details", critical = false)(od)
-    val sp = Silver.supplierParts(spark, dir)
-    results += st("silver_supplier_parts", critical = true)(sp)
-    // gold + quality (run_supplier_analytics.py:115-126) — the DQ stage runs
-    // every applicable family over the tables THIS pipeline wrote (no
-    // customer → no orders->customer probe; no customer_orders → no
-    // freshness arm for it)
+    // refined, over the written bronze tables (run_supplier_analytics.py:100-102)
+    val written = Quality.warehouseTables(spark, outDir)
+    results += st("silver_order_details", critical = false)(
+      Silver.orderDetails(written))
+    results += st("silver_supplier_parts", critical = true)(
+      Silver.supplierParts(written))
+    // gold over the written silver tables + quality
+    // (run_supplier_analytics.py:115-126) — the DQ stage runs every
+    // applicable family over the tables THIS pipeline wrote (no customer →
+    // no orders->customer probe; no customer_orders → no freshness arm)
     results += st("gold_supplier_performance", critical = false)(
-      Gold.supplierPerformance(sp, od))
+      Gold.supplierPerformance(written("supplier_parts"), written("order_details")))
     results += st("quality_checks", critical = false)(
       Quality.overWarehouse(spark, outDir,
         Seq("orders", "supplier", "part", "lineitem", "nation", "region",

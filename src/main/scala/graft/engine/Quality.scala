@@ -13,14 +13,17 @@ import org.apache.spark.sql.functions._
   * full-table aggregate that Spark runs as partial+final with map-side
   * combine, so the driver only ever sees one row per check at any scale.
   *
-  * Check inputs come through a [[TableResolver]] so the same families run in
-  * two modes:
+  * Check inputs come through a [[TableResolver]], the engine's one
+  * name → table map per side, so the same families run in two modes:
   *  - [[sourceTables]]: re-derive each layer from source (the standalone
   *    verification surface — what the oracle checks);
   *  - [[warehouseTables]]: read the PIPELINE'S WRITTEN parquet outputs.
   *    In a deployment the DQ stage audits what was materialized — re-running
   *    the silver derivation to check it would double the pipeline's cost at
   *    100 TB and verify a recomputation instead of the actual tables.
+  * [[Silver]] reads its bronze inputs through the same resolvers: the
+  * pipelines build silver from the written bronze tables and gold from the
+  * written silver tables via [[warehouseTables]].
   */
 object Quality {
 

@@ -4,8 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Num._
+import Quality.{TableResolver, sourceTables}
 
 /** Silver layer: denormalized facts + business metrics.
+  *
+  * Every model reads its bronze inputs through a [[Quality.TableResolver]]
+  * (logical name → frame). The `(spark, dir)` forms pass
+  * [[Quality.sourceTables]], re-deriving bronze from the raw files (the
+  * registry, catalog and oracle surface); the pipelines pass
+  * [[Quality.warehouseTables]], so silver reads the `bronze_*` tables the run
+  * just wrote instead of re-running the bronze gates and the lineitem dedup.
   *
   * Determinism contract (SURVEY.md §7.4): `current_date()` is replaced by the
   * pinned [[Silver.RefDate]] (fixture orders span 1995-01-01 → 2001-08-01),
@@ -30,10 +38,13 @@ object Silver {
     * `is_late_shipment` is redefined as `shipping_delay_days > 90` and
     * `delivery_delay_days` / `ship_mode` are dropped (SURVEY.md §7.3).
     */
-  def orderDetails(spark: SparkSession, dir: String): DataFrame = Lineage.refine {
-    val o = Bronze.orders(spark, dir)
-    val l = Bronze.lineitem(spark, dir)
-    val p = Bronze.part(spark, dir)
+  def orderDetails(spark: SparkSession, dir: String): DataFrame =
+    orderDetails(sourceTables(spark, dir))
+
+  def orderDetails(t: TableResolver): DataFrame = Lineage.refine {
+    val o = t("orders")
+    val l = t("lineitem")
+    val p = t("part")
 
     o.join(l, col("o_orderkey") === col("l_orderkey"), "inner")
       .join(broadcast(p), col("l_partkey") === col("p_partkey"), "left")
@@ -86,11 +97,14 @@ object Silver {
     * NTILE windows get `customer_key` tiebreakers (reference has none —
     * quintile boundaries are tie-ambiguous across engines otherwise).
     */
-  def customerOrders(spark: SparkSession, dir: String): DataFrame = {
-    val geo = customerGeo(spark, dir)
+  def customerOrders(spark: SparkSession, dir: String): DataFrame =
+    customerOrders(sourceTables(spark, dir))
+
+  def customerOrders(t: TableResolver): DataFrame = {
+    val geo = customerGeo(t)
 
     val cnt = count(col("o_orderkey"))
-    val oagg = Bronze.orders(spark, dir)
+    val oagg = t("orders")
       .groupBy(col("o_custkey").as("customer_key"))
       .agg(
         cnt.as("total_orders"),
@@ -148,10 +162,13 @@ object Silver {
     * (reference: src/refined/refined_customer_orders.py:25-41) —
     * both dims broadcast (25 / 5 rows; never worth a shuffle at any scale). */
   def customerGeo(spark: SparkSession, dir: String): DataFrame =
-    Bronze.customer(spark, dir)
-      .join(broadcast(Bronze.nation(spark, dir)),
+    customerGeo(sourceTables(spark, dir))
+
+  def customerGeo(t: TableResolver): DataFrame =
+    t("customer")
+      .join(broadcast(t("nation")),
         col("c_nationkey") === col("n_nationkey"), "left")
-      .join(broadcast(Bronze.region(spark, dir)),
+      .join(broadcast(t("region")),
         col("n_regionkey") === col("r_regionkey"), "left")
       .select(
         col("c_custkey").as("customer_key"),
@@ -171,8 +188,11 @@ object Silver {
     * nation / region are all broadcast dims.
     */
   def supplierParts(spark: SparkSession, dir: String): DataFrame =
-    supplierPartsFromBridge(spark, dir,
-      Bronze.lineitem(spark, dir)
+    supplierParts(sourceTables(spark, dir))
+
+  def supplierParts(t: TableResolver): DataFrame =
+    supplierPartsFromBridge(t,
+      t("lineitem")
         .groupBy(col("l_partkey").as("part_key"), col("l_suppkey").as("supplier_key"))
         .agg(
           r2(min(col("l_extendedprice") / col("l_quantity"))).as("supply_cost"),
@@ -185,11 +205,14 @@ object Silver {
     * paths share THIS code for everything past the bridge, so their
     * bit-identity is structural, not coincidental. */
   def supplierPartsFromBridge(spark: SparkSession, dir: String,
-                              bridge: DataFrame): DataFrame = {
-    val s = Bronze.supplier(spark, dir)
-      .join(broadcast(Bronze.nation(spark, dir)),
+                              bridge: DataFrame): DataFrame =
+    supplierPartsFromBridge(sourceTables(spark, dir), bridge)
+
+  def supplierPartsFromBridge(t: TableResolver, bridge: DataFrame): DataFrame = {
+    val s = t("supplier")
+      .join(broadcast(t("nation")),
         col("s_nationkey") === col("n_nationkey"), "left")
-      .join(broadcast(Bronze.region(spark, dir)),
+      .join(broadcast(t("region")),
         col("n_regionkey") === col("r_regionkey"), "left")
       .select(
         col("s_suppkey").as("supplier_key"),
@@ -198,7 +221,7 @@ object Silver {
         col("r_name").as("supplier_region"),
         col("s_acctbal").as("supplier_acct_balance"))
 
-    val p = Bronze.part(spark, dir).select(
+    val p = t("part").select(
       col("p_partkey").as("part_key"),
       col("p_name").as("part_name"),
       col("p_brand").as("part_brand"),

@@ -1336,13 +1336,12 @@ object Streams {
     import graft.sources.Versioned
     import graft.ext.Sketch
     if (alreadyFolded(spark, path, batchId)) return
-    val delta = cols.map(c => Sketch.statsState(batch, table, c))
-      .reduce(_ unionByName _)
-    val merged = Versioned.latestVersion(spark, path) match {
-      case Some(_) =>
-        Sketch.mergeStatsStates(Seq(Versioned.read(spark, path), delta))
-      case None => Sketch.mergeStatsStates(Seq(delta))
-    }
+    // one fused pass over the batch; the zero states keep every column
+    // present when the batch is empty
+    val delta = Seq(Sketch.statsStates(batch, table, cols),
+      Sketch.zeroStatesFor(spark, cols.map(table -> _)))
+    val merged = Sketch.mergeStatsStates(
+      Versioned.latestVersion(spark, path).map(_ => Versioned.read(spark, path)).toSeq ++ delta)
     Versioned.write(merged, path, Some(s"batch=$batchId"))
     ()
   }

@@ -48,8 +48,8 @@ class PipelineSpec extends SparkSpec {
       s"warehouse DQ disagrees with derived DQ: ${audited.diff(derived)} vs ${derived.diff(audited)}")
   }
 
-  test("sales pipeline installs the measured stats profile: silver-stage joins " +
-      "are decided by the catalog, not the file-size heuristic") {
+  test("sales pipeline installs the measured stats profile: a plain join over " +
+      "the profiled source tables is decided by the catalog, not the file-size heuristic") {
     import graft.plans.StatsHint
     import org.apache.spark.sql.catalyst.plans.logical.Join
     val o = graft.engine.Sources.orders(spark, sf)
@@ -79,6 +79,64 @@ class PipelineSpec extends SparkSpec {
       assert(after.exists(h => h.leftHint.nonEmpty || h.rightHint.nonEmpty),
         s"profile installed but the silver fact join carries no injected hint: $after")
     } finally StatsHint.uninstall(spark)
+  }
+
+  test("pipelines build each layer from the written layer below: silver and gold " +
+      "stages scan no raw input, and the written gold tables equal the registry's") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // every file-scan root of every query, keyed by its job group: each
+    // pipeline stage runs in a job group named after the stage, and a scan
+    // node's Location metadata names its root path in full
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def locations(p: SparkPlanInfo): Seq[String] =
+      p.metadata.get("Location").toSeq ++ p.children.flatMap(locations)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          s.jobGroupId.foreach(g => locations(s.sparkPlanInfo).foreach(l => scans.add(g -> l)))
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("graft_pipe_layers").toString
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.runSalesAnalytics(spark, sf, s"$out/sales")
+      Pipeline.runSupplierAnalytics(spark, sf, s"$out/supplier")
+      org.apache.spark.graft.SparkBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    val byStage = scans.asScala.toSeq.groupMap(_._1)(_._2)
+    def scanned(prefix: String): Map[String, Seq[String]] =
+      byStage.filter(_._1.startsWith(prefix))
+    val raw = s"$sf/"
+    // the listener sees raw scans where they belong: bronze reads the source
+    assert(scanned("bronze_").values.flatten.exists(_.contains(raw)), byStage.toString)
+    // silver reads the written bronze tables and gold the written silver
+    // tables — never a raw <table>.parquet input
+    for ((layer, below) <- Seq("silver_" -> "/bronze_", "gold_" -> "/silver_")) {
+      val stages = scanned(layer)
+      assert(stages.nonEmpty, s"no $layer stage traced: ${byStage.keySet}")
+      stages.foreach { case (stage, roots) =>
+        assert(!roots.exists(_.contains(raw)), s"$stage scans a raw input: $roots")
+        assert(roots.exists(_.contains(below)), s"$stage reads no $below table: $roots")
+      }
+    }
+    // ... and the gold tables they wrote equal the registry's from-source
+    // queries row for row
+    Seq("gold_revenue_by_region" -> "sales", "gold_customer_lifetime_value" -> "sales",
+      "gold_monthly_sales_trends" -> "sales", "gold_supplier_performance" -> "supplier")
+      .foreach { case (q, scope) =>
+        val written = spark.read.parquet(s"$out/$scope/$q")
+        val expected = SparkEntry.queries(q)(spark, sf)
+        assert(written.columns.toSeq === expected.columns.toSeq, q)
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+        val (w, e) = (rows(written), rows(expected))
+        assert(w.nonEmpty && w === e, s"$q: written ${w.size} rows vs registry ${e.size}")
+      }
   }
 
   test("corpus pipeline: all stages pass, scrub boundary holds, DQ gate all-PASS") {
