@@ -13,10 +13,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Self-auditing (r5 shipped a 3x throttle-inflated snapshot with no
   * cross-check): the JSON also carries per-query `mins`, the suite
-  * `throttle_ratio` = Σmedian / Σmin, and the pass count — and when the
-  * ratio exceeds [[ThrottleLimit]] the bench runs EXTRA interleaved passes
-  * (up to SPARK_GRAFT_BENCH_MAX_PASSES) until the medians settle, so a
-  * throttle episode widens the sample instead of poisoning the artifact.
+  * `throttle_ratio` = Σmedian / Σmin, and the pass count, so a reader can
+  * see a throttle episode in the artifact. A gain between two builds is
+  * judged by perfbench's alternating pair protocol, not by one run's
+  * medians.
   *
   * Modes:
   *  - SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the timed set; the output then
@@ -36,14 +36,13 @@ import org.apache.spark.sql.SparkSession
   * kill landed mid-widening and the bench had emitted ZERO bytes —
   * BENCH_r13.json was rc 124 with an empty tail, the first missing bench
   * artifact in 13 rounds):
-  *  - the pass loops are bounded by an elapsed-wall-clock budget
-  *    (SPARK_GRAFT_BENCH_WALL_BUDGET seconds, default [[DefaultWallBudget]]):
-  *    a pass is only STARTED while `elapsed + last-pass-duration` fits,
-  *    so the run converges to an artifact instead of to a kill — the
-  *    throttle sentinel still widens, just within budget (`budget_stop`
-  *    flags a budget-truncated run);
+  *  - the pass loop is bounded by an elapsed-wall-clock budget
+  *    ([[DefaultWallBudget]] seconds): a pass is only STARTED while
+  *    `elapsed + last-pass-duration` fits, so the run converges to an
+  *    artifact instead of to a kill (`budget_stop` flags a
+  *    budget-truncated run);
   *  - base passes drop from 3 to 2 past [[BigRegistry]] queries (medians
-  *    of 2 = midpoints; the sentinel still widens within budget);
+  *    of 2 = midpoints);
   *  - a JVM shutdown hook prints the JSON line(s) from whatever samples
   *    exist (`"partial":true` + per-query sample counts in `nsamples`)
   *    the moment an external TERM lands, so even a kill yields a parsed
@@ -56,8 +55,6 @@ import org.apache.spark.sql.SparkSession
   *    `skipped_harness` so a total is never read as whole-registry.
   */
 object Bench {
-
-  val ThrottleLimit = 1.5
 
   /** Default wall budget (seconds): the driver's observed kill window is
     * ~20 min of WALL time including JVM/sbt startup (which happens before
@@ -94,9 +91,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq(sfDir))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val wallBudget = sys.env.get("SPARK_GRAFT_BENCH_WALL_BUDGET")
-      .map(_.toDouble).getOrElse(DefaultWallBudget)
-    val maxPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_PASSES", "7").toInt
     // The driver's tail capture must contain ONLY the JSON line(s), and it
     // reads a merged stream — per-package level whack-a-mole (r6 #6, r8 #3,
     // r9 #4: WindowExec, SparkStringUtils, BlockManager-init INFO, …) kept
@@ -122,8 +116,7 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
       .filterNot(skip)
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt)
-      .getOrElse(if (names.size > BigRegistry) 2 else 3)
+    val passes = if (names.size > BigRegistry) 2 else 3
     // multi-SF scaling mode: beyond the smallest SF (dirs are ordered
     // smallest-first), the declared small-n baselines are excluded — they
     // are quadratic by construction (SparkEntry.smallNOnly; measured r6:
@@ -174,11 +167,6 @@ object Bench {
       if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    def ratio(): Double = lock.synchronized {
-      val meds = samples.values.map(median).sum
-      val mins = samples.values.map(_.min).sum
-      if (mins > 0) meds / mins else 1.0
-    }
     // wall-budget gate: start another pass only if the last pass's duration
     // fits in the remaining budget (pass 1 always runs — one sample per
     // query beats no artifact). `budgetStop` marks a truncated run so a
@@ -190,7 +178,7 @@ object Bench {
     var lastPass = 0.0
     var budgetStop = false
     def tryPass(): Boolean = {
-      if (done > 0 && elapsed + lastPass > wallBudget) {
+      if (done > 0 && elapsed + lastPass > DefaultWallBudget) {
         lock.synchronized { budgetStop = true }
         false
       } else {
@@ -303,12 +291,7 @@ object Bench {
     // timed query doesn't absorb JVM + whole-stage-codegen compilation.
     // AFTER the hook registration: a kill landing during warmup still emits.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    var go = true
-    while (go && done < passes) go = tryPass()
-    // throttle sentinel: a ratio past the limit means at least one query's
-    // median is riding a throttle episode — widen the sample rather than
-    // committing a poisoned artifact (within the wall budget)
-    while (go && ratio() > ThrottleLimit && done < maxPasses) go = tryPass()
+    while (done < passes && tryPass()) ()
     samplingDone.set(true)
     val lines = sfDirs.map(lineFor(_))
     // full-precision artifact path: per-query medians AND mins for every

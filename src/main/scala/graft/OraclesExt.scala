@@ -1942,9 +1942,9 @@ object OraclesExt {
        |UNION ALL
        |${auditArmSql("ann_ivf_pq", simAnnIvfPq)}
        |UNION ALL
-       |${if (graft.ext.Similarity.AuditRpArm)
-           auditArmSql("ann_ivf_rp", simAnnIvfRp) + "\nUNION ALL\n" else ""}${
-         auditArmSql("ann_lsh", simAnnLsh)}
+       |${auditArmSql("ann_ivf_rp", simAnnIvfRp)}
+       |UNION ALL
+       |${auditArmSql("ann_lsh", simAnnLsh)}
        |UNION ALL
        |${auditArmSql("knn_quantized", simQuantizedKnn)}
        |UNION ALL

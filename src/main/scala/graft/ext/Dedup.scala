@@ -467,7 +467,6 @@ object Dedup {
     var converged = false
     var rounds = 0
     while (!converged && rounds < 20) {
-      val t0 = System.nanoTime()
       // one neighbor-min pass per round; the convergence signal rides on the
       // SAME action that materializes the round's labels (a separate isEmpty
       // probe would run the edges⋈labels join a second time per round)
@@ -511,8 +510,6 @@ object Dedup {
         free(labelIds); free(nextIds)
         labels = jumped; labelIds = jumpedIds
       }
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC round=$rounds changed=$changed t=${(System.nanoTime() - t0) / 1e9}%.2fs")
       rounds += 1
     }
     // the returned labels leaf is materialized (every round's checkpoint

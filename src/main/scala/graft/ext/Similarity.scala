@@ -1376,49 +1376,19 @@ object Similarity {
     * engines agree bit-for-bit. At 100 TB this runs on a SAMPLE of queries
     * (the exact arm is the O(n²) baseline) — the audit shape is unchanged,
     * only the query-side input shrinks. */
-  /** Ablation knob for the scaling/bench artifacts: `GRAFT_AUDIT_NO_RP`
-    * drops the `ann_ivf_rp` arm (and its in-audit model build) from
-    * [[recallAudit]], isolating what the reduce-then-index arm costs the
-    * fixture-grain audit (the build is driver-latency-bound at fixture
-    * sizes — Lloyd collects + per-round codegen — so it cannot hide inside
-    * the other builds' wall-clock). The DuckDB twin reads the SAME value
-    * ([[graft.OraclesExt]] assembles its arm list from it), so oracle
-    * parity holds at either setting — exactly the GRAFT_HIER_K1
-    * discipline. The `rp_knn` arm is NOT affected: it rides the shared
-    * exact pass for free. */
-  val AuditRpArm: Boolean = {
-    val off = sys.env.contains("GRAFT_AUDIT_NO_RP")
-    if (off) System.err.println(
-      "graft: recall audit running WITHOUT the ann_ivf_rp arm (ablation)")
-    !off
-  }
-
   def recallAudit(spark: SparkSession, dir: String): DataFrame =
-    recallAuditAt(spark, dir, AuditRpArm)
+    recallAuditAt(spark, dir)
 
-  /** [[recallAudit]] with the ann_ivf_rp arm explicit — the registered
-    * query binds it to [[AuditRpArm]]; [[graft.AuditProbe]] times the
-    * settings interleaved in ONE session (the only comparison this VM's
-    * run-to-run variance permits). `shareStruct`/`serial` are probe-only
-    * knobs (outputs identical at every setting): shareStruct=false
-    * rebuilds the flat arm's structure independently (the r13 shape),
-    * serial=true runs every build on one thread (the overlap-honesty
-    * arm). GRAFT_AUDIT_TRACE=1 prints phase wall times to stderr. */
+  /** [[recallAudit]] with the session cache explicit: `useCache = false`
+    * rebuilds every quantizer structure, calibration and codebook, the
+    * uncached reference SessionCacheSpec compares the cached form against. */
   private[graft] def recallAuditAt(spark: SparkSession, dir: String,
-                                   withRp: Boolean,
-                                   shareStruct: Boolean = true,
-                                   serial: Boolean = false,
                                    useCache: Boolean = true): DataFrame = {
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    val trace = sys.env.contains("GRAFT_AUDIT_TRACE")
-    val tStart = System.nanoTime()
-    def mark(phase: String): Unit = if (trace) System.err.println(
-      f"[audit-trace] $phase%-12s done at ${(System.nanoTime() - tStart) / 1e9}%.2f s")
     val pins = new Pins
     val vecs = pins.pin(withNorm(Sources.embeddings(spark, dir)))
     vecs.count() // materialize before forking — every arm reads it
-    mark("corpus")
     // ONE n² pass scores both spaces (exact ground truth + the rp arm) —
     // the audit's only cartesian-shaped join; see [[knnWithRpFrom]]. It is
     // CLUSTER-heavy while the model builds are DRIVER-latency-bound (Lloyd
@@ -1432,7 +1402,6 @@ object Similarity {
     val fExact = Future {
       both.count()
       exact.count() // eager: 6 arms join it, and the calibrations reuse it
-      mark("n2-pass")
       exact
     }
     // arm MODEL BUILDS are chains of small driver-coordinated jobs (Lloyd
@@ -1445,11 +1414,9 @@ object Similarity {
     // order).
     val (m, scored, kmArm, books, rpArm) = buildArmsParallel(vecs, fExact,
       pins, preRpExact = Some(explodeTop(both, "top_rp")
-        .select(col("query_id"), col("neighbor_id"))), withRp = withRp,
-      shareStruct = shareStruct, serial = serial,
+        .select(col("query_id"), col("neighbor_id"))),
       cacheKey = if (useCache) Some(dir) else None)
-    mark("builds")
-    val res = recallOverParallel(spark, exact, Seq(
+    recallOverParallel(spark, exact, Seq(
       "ann_ivf" -> annIvfPinned(spark, dir, pins),
       "ann_ivf_hier" -> hierArm(scored),
       "ann_ivf_hier_spill" -> hierArmSpill(scored, m.nProbe),
@@ -1459,8 +1426,6 @@ object Similarity {
       "ann_lsh" -> annLsh(spark, dir),
       "knn_quantized" -> quantizedKnn(spark, dir),
       "rp_knn" -> explodeTop(both, "top_rp")), pins)
-    mark("arm-eval")
-    res
   }
 
   /** The audits' shared eager phase. ONE [[hierStructure]] build feeds
@@ -1471,16 +1436,13 @@ object Similarity {
     * space) where r13 ran four. Forked: (structure → hier calibration +
     * scored), (structure → flat arm), the PQ codebooks, and the
     * reduce-then-index rp arm ([[annIvfRp]]'s chain over the projected
-    * corpus). Each is deterministic, so threading changes wall-clock
-    * only. `preExact` does NOT feed the rp build: its calibration truth
-    * lives in the projected space. */
+    * corpus), built only when `preRpExact` is given. Each is deterministic,
+    * so threading changes wall-clock only. `fExact` does NOT feed the rp
+    * build: its calibration truth lives in the projected space. */
   private def buildArmsParallel(vecs: DataFrame,
                                 fExact: scala.concurrent.Future[DataFrame],
                                 pins: Pins,
                                 preRpExact: Option[DataFrame] = None,
-                                withRp: Boolean = false,
-                                shareStruct: Boolean = true,
-                                serial: Boolean = false,
                                 cacheKey: Option[String] = None)
       : (HierModel, DataFrame, DataFrame, Pq.Books, Option[DataFrame]) = {
     import scala.concurrent.{Await, Future}
@@ -1491,8 +1453,7 @@ object Similarity {
     def exact: DataFrame = Await.result(fExact, Duration.Inf)
     // session-shared (same keys as the standalone annIvfHier/annIvfRp/
     // annIvfKmeans entrypoints — ONE Lloyd chain per corpus/space per
-    // session); AuditProbe passes useCache=false so its ablation arms
-    // still measure real builds
+    // session); no cache key rebuilds every structure
     def structPart(): (Array[Cent], DataFrame, Int) = cacheKey match {
       case Some(d) => hierStructureShared(vecs, s"$d#base")
       case None =>
@@ -1512,25 +1473,11 @@ object Similarity {
       scored.count() // the hier and PQ arms would contend on cold cache
       (m, scored)
     }
-    // shared: the flat arm's cell set comes from the ONE structure build;
-    // unshared (the ablation arm — AuditProbe): the flat arm rebuilds its
-    // own, exactly the r13 independent-builds shape. Outputs identical
-    // (ExtSpec's seeded-identity test). The duplicate structure builds
-    // BEFORE the exact pass is awaited (the await hides in the preExact
-    // argument), so the unshared arm overlaps its build with the n² scan
-    // like every other structure build — otherwise the ablation would
-    // charge the duplicated build with lost overlap it never had.
-    def kmPart(subs: Option[DataFrame]): DataFrame = {
-      val cents = subs.map(flatCents).getOrElse {
-        val (_, s, _) = hierStructure(vecs)
-        val out = flatCents(s)
-        s.unpersist()
-        out
-      }
+    // the flat arm's cell set comes from the ONE structure build
+    def kmPart(subs: DataFrame): DataFrame =
       annIvfKmeansFrom(vecs, pins, preExact = Some(exact),
-        preCents = Some(cents), cacheKey = cacheKey)
-    }
-    def rpPart(): Option[DataFrame] = if (!withRp) None else {
+        preCents = Some(flatCents(subs)), cacheKey = cacheKey)
+    def rpPart(): Option[DataFrame] = preRpExact.map { rpExact =>
       val rvecs = pins.pin(rpVecsOf(vecs))
       // structure first (projection + Lloyd need no ground truth) ...
       val (l1r, subsr, k2r) = cacheKey match {
@@ -1546,38 +1493,26 @@ object Similarity {
       // calibration-sample prefix is row-identical to the exactSampled arm
       // hierCalibrate would otherwise rebuild (same (mixHash, id)-lowest
       // sample, same rounded cosine order), so the m·n projected exact
-      // pass disappears. Await the pass (preRpExact reads `both`) — only
+      // pass disappears. Await the pass (rpExact reads `both`) — only
       // on a COLD calibration (the memoized depth needs no truth).
       val nP = cachedNp(cacheKey.map(d => s"$d#rp#$RpDims")) {
         exact
-        hierCalibrate(rvecs, l1r, subsr, k2r, preRpExact)
+        hierCalibrate(rvecs, l1r, subsr, k2r, Some(rpExact))
       }
-      Some(hierArm(pins.pin(hierScored(rvecs, l1r, subsr, nP))))
+      hierArm(pins.pin(hierScored(rvecs, l1r, subsr, nP)))
     }
     def books(): Pq.Books = cacheKey match {
       case Some(d) => SessionVal(s"pqbooks#$d#base")(Pq.pqCodebooksLocal(vecs))
       case None => Pq.pqCodebooksLocal(vecs)
     }
-    if (serial) {
-      // the concurrency-honesty arm (VERDICT r13 #7): every build on ONE
-      // thread, in dependency order AFTER the exact pass — serial_min /
-      // shared_min is the measured overlap factor of the threaded shape
-      exact
-      val t = structPart()
-      val (m, scored) = hierPart(t)
-      (m, scored, kmPart(if (shareStruct) Some(t._2) else None),
-        books(), rpPart())
-    } else {
-      val fStruct = Future(structPart())
-      val fHier = fStruct.map(hierPart)
-      val fKm = if (shareStruct) fStruct.map(t => kmPart(Some(t._2)))
-                else Future(kmPart(None))
-      val fBooks = Future(books())
-      val fRp = Future(rpPart())
-      val (m, scored) = Await.result(fHier, Duration.Inf)
-      (m, scored, Await.result(fKm, Duration.Inf),
-        Await.result(fBooks, Duration.Inf), Await.result(fRp, Duration.Inf))
-    }
+    val fStruct = Future(structPart())
+    val fHier = fStruct.map(hierPart)
+    val fKm = fStruct.map(t => kmPart(t._2))
+    val fBooks = Future(books())
+    val fRp = Future(rpPart())
+    val (m, scored) = Await.result(fHier, Duration.Inf)
+    (m, scored, Await.result(fKm, Duration.Inf),
+      Await.result(fBooks, Duration.Inf), Await.result(fRp, Duration.Inf))
   }
 
   /** Materialize a small audit result, release every pin the audit created,
@@ -1624,21 +1559,14 @@ object Similarity {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val trace = sys.env.contains("GRAFT_AUDIT_TRACE")
     val frames = methods.map { case (name, approx) =>
-      (name, recallFrame(exact, name, approx)) }
+      recallFrame(exact, name, approx) }
     val rows = Await.result(
-      Future.sequence(frames.map { case (name, f) => Future {
-        val t0 = System.nanoTime()
-        val out = f.collect()
-        if (trace) System.err.println(
-          f"[audit-trace]   arm $name%-20s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        out
-      }}),
+      Future.sequence(frames.map(f => Future(f.collect()))),
       Duration.Inf).flatten
     pins.release()
     spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      frames.head._2.schema)
+      frames.head.schema)
   }
 
   /** Audit query-sample size for [[recallAuditSampled]] — smaller than the

@@ -471,33 +471,40 @@ object Sketch {
     * [[statsStates]] fusion applied to the audit profile): the per-column
     * form scanned each table TWICE per column (stats agg + KMV
     * distinct/TakeOrdered) — 18 scans across the 9 profiled columns. Here
-    * each row explodes to one (column, canonical-int, hash, value) entry
-    * per profiled column and ONE aggregate per table computes every
-    * column's whole row: counts/min/max as plain aggs, the exact NDV as
-    * COUNT(DISTINCT canonical-int) — identical to COUNT(DISTINCT c)
-    * because the canonical mapping ([[hashKey]]: ints pass through, money
-    * cent-scales exactly, the SAME injection the KMV sketch already
-    * trusts) is injective on the schema's value contract — and the KMV via
-    * the bounded [[graft.functions.TopKByScore.topKDistinct]], exactly as
-    * [[statsStates]] does. min/max move through the double cast, which is
-    * monotone-injective for every profiled type. 4 scans instead of 18;
-    * value-identical to mapping [[profileCol]] (SketchSpec pins it). */
-  private def profileTable(df: DataFrame, table: String,
-                           cols: Seq[String]): DataFrame = {
+    * each row explodes to one (column, hash, value) entry per profiled
+    * column and ONE aggregate per table computes every column's whole row:
+    * counts/min/max and the exact NDV as plain aggs over the double-cast
+    * value — monotone-injective for every profiled type, so
+    * COUNT(DISTINCT v) counts raw values exactly as COUNT(DISTINCT c) does,
+    * off-contract decimals included — and the KMV via the bounded
+    * [[graft.functions.TopKByScore.topKDistinct]], exactly as
+    * [[statsStates]] does. One marker entry per column (null `_n`, `h` and
+    * `v`, so no aggregate counts it) keeps every column's group present
+    * when the table is empty: the row then reads n_rows = 0, ndv = 0 and
+    * null min/max, as [[profileCol]] and the oracle give. 4 scans instead
+    * of 18; value-identical to mapping [[profileCol]] (ExtSpec pins it). */
+  private[graft] def profileTable(df: DataFrame, table: String,
+                                  cols: Seq[String]): DataFrame = {
+    import df.sparkSession.implicits._
     val entries = cols.map { c =>
-      struct(lit(c).as("c"), hashKey(df, c).as("ck"),
-        mixHash(hashKey(df, c)).as("h"), col(c).cast("double").as("v"))
+      struct(lit(c).as("c"), mixHash(hashKey(df, c)).as("h"),
+        col(c).cast("double").as("v"))
     }
+    val rows = df.select(explode(array(entries: _*)).as("e"))
+      .select(col("e.c").as("column_name"), lit(1).as("_n"),
+        col("e.h").as("h"), col("e.v").as("v"))
+    val markers = cols.toDF("column_name")
+      .select(col("column_name"), lit(null).cast("int").as("_n"),
+        lit(null).cast(rows.schema("h").dataType).as("h"),
+        lit(null).cast("double").as("v"))
     val est = when(size(col("kmv")) < KmvK, size(col("kmv")).cast("double"))
       .otherwise(Num.r(lit((KmvK - 1).toDouble) * M32
         / element_at(col("kmv"), -1), 2))
-    df.select(explode(array(entries: _*)).as("e"))
-      .select(col("e.c").as("column_name"), col("e.ck").as("ck"),
-        col("e.h").as("h"), col("e.v").as("v"))
+    rows.unionByName(markers)
       .groupBy("column_name")
-      .agg(count(lit(1)).as("n_rows"),
-        (count(lit(1)) - count(col("v"))).as("n_nulls"),
-        countDistinct(col("ck")).as("ndv_exact"),
+      .agg(count(col("_n")).as("n_rows"),
+        (count(col("_n")) - count(col("v"))).as("n_nulls"),
+        countDistinct(col("v")).as("ndv_exact"),
         min(col("v")).as("min_value"), max(col("v")).as("max_value"),
         transform(graft.functions.TopKByScore.topKDistinct(
           (-col("h")).cast("double"), col("h"), KmvK),

@@ -144,12 +144,6 @@ object TextIndex {
     ensureTables(spark, storePath)
   }
 
-  /** Probe access to the live store sides ([[graft.ext.PhaseProbe]]). */
-  private[ext] def livePostings(spark: SparkSession, storePath: String): DataFrame =
-    live(spark, storePath, requireStore(spark, storePath)._1)
-  private[ext] def liveStats(spark: SparkSession, storePath: String): DataFrame =
-    live(spark, storePath, requireStore(spark, storePath)._2)
-
   /** BM25 top-k search for a (qid, qtext) query batch against the store:
     * the tiny distinct-term set broadcasts into the postings scan (the
     * store side arrives bucket-distributed on `token` — no exchange on

@@ -1532,6 +1532,20 @@ class SketchSpec extends SparkSpec {
         Sketch.profileCol(Sketch.sliceSource(spark, sf, t)._1, t, c) }
       .reduce(_ unionByName _)
     assert(rowsOf(Sketch.tableProfile(spark, sf)) === rowsOf(perColumn))
+    // hostile inputs: an empty slice keeps one n_rows = 0 row per column,
+    // and off-contract 3-decimal money counts its raw distinct values
+    import spark.implicits._
+    val orders = Sketch.sliceSource(spark, sf, "orders")._1
+    val ordersCols = Sketch.ProfiledColumns.collect { case ("orders", c) => c }
+    val threeDecimals = Seq(Some(1.001), Some(1.004), Some(2.5), None)
+      .toDF("o_totalprice")
+    for ((df, cols) <- Seq(orders.where(lit(false)) -> ordersCols,
+                           threeDecimals -> Seq("o_totalprice"))) {
+      val fused = rowsOf(Sketch.profileTable(df, "orders", cols))
+      val reference = rowsOf(
+        cols.map(Sketch.profileCol(df, "orders", _)).reduce(_ unionByName _))
+      assert(fused === reference)
+    }
   }
 
   test("empty slice keeps its columns in the drift report via zero-count " +

@@ -26,9 +26,8 @@ class SessionCacheSpec extends SparkSpec {
   }
 
   test("recall audit: session-cached ≡ uncached builds") {
-    val cached = rows(Similarity.recallAuditAt(spark, sf, withRp = true))
-    val uncached = rows(Similarity.recallAuditAt(spark, sf, withRp = true,
-      useCache = false))
+    val cached = rows(Similarity.recallAuditAt(spark, sf))
+    val uncached = rows(Similarity.recallAuditAt(spark, sf, useCache = false))
     assert(cached === uncached)
   }
 
