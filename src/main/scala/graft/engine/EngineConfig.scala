@@ -6,22 +6,15 @@ import java.io.File
 /** Environment configuration — the reference's `_context` widget + JSON layer
   * (reference: src/pipelines/_context.py:16-52 loads `configs/{env}.json`,
   * validates env ∈ {dev, stage, prod}, and falls back to inline defaults;
-  * configs/dev.json:1-12 and prod.json carry retry policy + log level).
+  * configs/dev.json:1-12 and prod.json carry the retry policy).
   *
-  * The catalog/schema trio maps to output-path prefixes in this file-based
-  * lake (a Unity catalog name and a directory root play the same role: the
-  * namespace every stage writes under).
+  * Only the settings the engine reads are kept: the stage retry/timeout
+  * policy and the store geometry. The reference's catalog, schema, pipeline
+  * mode and log level name Unity Catalog objects and cluster settings; in
+  * this file-based lake the output directory is the namespace, so they
+  * have no reader here.
   */
 final case class EngineConfig(
-    env: String,
-    catalog: String,
-    extractSchema: String,
-    refinedSchema: String,
-    viewsSchema: String,
-    sourceCatalog: String,
-    sourceSchema: String,
-    pipelineMode: String,
-    logLevel: String,
     maxRetryAttempts: Int,
     retryDelaySeconds: Double,
     stageTimeoutSeconds: Double,
@@ -58,16 +51,7 @@ object EngineConfig {
   /** Inline defaults, used when `configs/{env}.json` is absent — the same
     * fallback behavior as the reference (_context.py:33-43). Stage timeout
     * mirrors run_sales_analytics.py:45's 3600 s notebook bound. */
-  def defaults(env: String): EngineConfig = EngineConfig(
-    env = env,
-    catalog = s"${env}_lakehouse",
-    extractSchema = "bronze",
-    refinedSchema = "silver",
-    viewsSchema = "gold",
-    sourceCatalog = "samples",
-    sourceSchema = "tpch",
-    pipelineMode = "triggered",
-    logLevel = "WARN",
+  val defaults: EngineConfig = EngineConfig(
     maxRetryAttempts = 3,
     retryDelaySeconds = 60,
     stageTimeoutSeconds = 3600)
@@ -76,23 +60,13 @@ object EngineConfig {
   def load(env: String, configsDir: String = "configs"): EngineConfig = {
     require(ValidEnvs.contains(env),
       s"Invalid environment '$env'. Must be one of: ${ValidEnvs.mkString(", ")}")
-    val d = defaults(env)
+    val d = defaults
     val f = new File(configsDir, s"$env.json")
     if (!f.isFile) d
     else {
       val n = new ObjectMapper().readTree(f)
-      def str(k: String, dv: String) = if (n.hasNonNull(k)) n.get(k).asText() else dv
       def num(k: String, dv: Double) = if (n.hasNonNull(k)) n.get(k).asDouble() else dv
       EngineConfig(
-        env = env,
-        catalog = str("catalog", d.catalog),
-        extractSchema = str("extract_schema", d.extractSchema),
-        refinedSchema = str("refined_schema", d.refinedSchema),
-        viewsSchema = str("views_schema", d.viewsSchema),
-        sourceCatalog = str("source_catalog", d.sourceCatalog),
-        sourceSchema = str("source_schema", d.sourceSchema),
-        pipelineMode = str("pipeline_mode", d.pipelineMode),
-        logLevel = str("log_level", d.logLevel),
         maxRetryAttempts = num("max_retry_attempts", d.maxRetryAttempts).toInt,
         retryDelaySeconds = num("retry_delay_seconds", d.retryDelaySeconds),
         stageTimeoutSeconds = num("stage_timeout_seconds", d.stageTimeoutSeconds),

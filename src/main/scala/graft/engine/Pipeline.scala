@@ -118,7 +118,7 @@ object Pipeline {
     * partitioned by order_year for downstream pruning, matching the
     * reference's partition-aware write, refined_order_details.py:112-125). */
   def runSalesAnalytics(spark: SparkSession, dir: String, outDir: String,
-                        cfg: EngineConfig = EngineConfig.defaults("dev")): Seq[StageResult] = {
+                        cfg: EngineConfig = EngineConfig.defaults): Seq[StageResult] = {
     def st(name: String, critical: Boolean, partitionBy: Seq[String] = Nil)
           (df: => DataFrame): StageResult =
       stage(spark, cfg, name, critical, outDir, partitionBy)(df)
@@ -130,15 +130,11 @@ object Pipeline {
     results += st("bronze_part", critical = false)(Bronze.part(spark, dir))
     results += st("bronze_orders", critical = true)(Bronze.orders(spark, dir))
     results += st("bronze_lineitem", critical = true)(Bronze.lineitem(spark, dir))
-    // profile the source tables this pipeline reads and install the
-    // statistics catalog on the session: any PLAIN join over those tables
-    // then plans against measured row counts instead of the file-size
-    // heuristic. The silver/gold joins below read the written bronze_* and
-    // silver_* tables, which the profile has no entry for, so they keep
-    // Spark's own decision. Non-critical: a failed profile leaves the
-    // session planning exactly as before.
-    results += st("stats_profile_install", critical = false)(
-      installStatsProfile(spark, dir, Seq("orders", "lineitem", "customer")))
+    // profile the source tables this pipeline reads into an auditable
+    // warehouse table; nothing plans against it. Non-critical: a failed
+    // profile fails no layer.
+    results += st("stats_profile", critical = false)(
+      statsProfile(spark, dir, Seq("orders", "lineitem", "customer")))
     // silver over the written bronze tables (run_sales_analytics.py:109-114)
     val written = Quality.warehouseTables(spark, outDir)
     results += st("silver_order_details", critical = true,
@@ -321,14 +317,12 @@ object Pipeline {
     * the revenue and supplier-bridge states: per batch, fold each profiled
     * column's mergeable state (counts, min/max, the KMV hash set itself)
     * into the versioned store. O(delta) + O(state) per batch; the state is
-    * profiled-columns-grain (tiny). A planner consulting
-    * [[graft.ext.Sketch.advisedJoin]] then reads a profile that tracks the
-    * data as it lands instead of a scheduled ANALYZE snapshot — at 100 TB
-    * the difference between stats that lag a day and stats that lag a
-    * batch. Replay discipline identical to the other increment modes. */
+    * profiled-columns-grain (tiny). The drift gates
+    * ([[graft.ext.Sketch.statsDrift]]) then compare versions that track the
+    * data as it lands instead of a scheduled ANALYZE snapshot. Replay
+    * discipline identical to the other increment modes. */
   def runStatsIncrement(spark: SparkSession, deltas: String => DataFrame,
-                        outDir: String, batchId: Long,
-                        installHints: Boolean = false): Seq[StageResult] = {
+                        outDir: String, batchId: Long): Seq[StageResult] = {
     import graft.ext.Sketch
     import graft.sources.Versioned
     val results = Seq.newBuilder[StageResult]
@@ -353,39 +347,28 @@ object Pipeline {
       }
     results += StageResult("incr_table_stats", "PASS",
       (System.nanoTime() - t0) / 1e9, n)
-    // close the loop: the batch that refreshed the stats also refreshes
-    // the planner — every PLAIN join in the session now sizes against the
-    // state this batch just committed (replay-safe: installing the same
-    // profile twice is idempotent)
-    if (installHints)
-      graft.plans.StatsHint.install(spark,
-        Sketch.finalizeStats(Versioned.read(spark, path)))
     results.result()
   }
 
-  /** Measure a statistics profile over the PROFILED columns of the given
-    * source tables and install it on the session
-    * ([[graft.plans.StatsHint]]), returning the profile frame so the
-    * pipeline stage materializes it as an auditable warehouse table. One
-    * fused stats pass per table ([[graft.ext.Sketch.statsStates]]:
-    * counts/min/max/KMV of every profiled column — no exact-NDV audit arm),
-    * merged with the zero states so an empty table still reports
-    * `n_rows = 0`; the collect inside install is control-plane (one row per
-    * profiled column). Batch pipelines re-measure per run; a deployment
-    * with maintained stats calls [[runStatsIncrement]](installHints=true)
-    * instead and pays O(delta), not a rescan. */
-  private def installStatsProfile(spark: SparkSession, dir: String,
-                                  tables: Seq[String]): DataFrame = {
+  /** The statistics profile over the PROFILED columns of the given source
+    * tables, as a frame the pipeline stage materializes as an auditable
+    * warehouse table. One fused stats pass per table
+    * ([[graft.ext.Sketch.statsStates]]: counts/min/max/KMV of every
+    * profiled column — no exact-NDV audit arm), merged with the zero
+    * states so an empty table still reports `n_rows = 0`. Lazy: the stage's
+    * write is its only evaluation. Batch pipelines re-measure per run; a
+    * deployment with maintained stats calls [[runStatsIncrement]] instead
+    * and pays O(delta), not a rescan. */
+  private def statsProfile(spark: SparkSession, dir: String,
+                           tables: Seq[String]): DataFrame = {
     import graft.ext.Sketch
     val profiled = Sketch.ProfiledColumns.filter(p => tables.contains(p._1))
     val states = profiled.map(_._1).distinct.map { t =>
       Sketch.statsStates(Sketch.sliceSource(spark, dir, t)._1, t,
         profiled.collect { case (`t`, c) => c })
     }
-    val prof = Sketch.finalizeStats(Sketch.mergeStatsStates(
+    Sketch.finalizeStats(Sketch.mergeStatsStates(
       states :+ Sketch.zeroStatesFor(spark, profiled)))
-    graft.plans.StatsHint.install(spark, prof)
-    prof
   }
 
   /** The supplier pipeline (reference: run_supplier_analytics.py:68-126):
@@ -394,7 +377,7 @@ object Pipeline {
     * quality — the full stage list the reference materializes, not just the
     * supplier-only subset. */
   def runSupplierAnalytics(spark: SparkSession, dir: String, outDir: String,
-                           cfg: EngineConfig = EngineConfig.defaults("dev")): Seq[StageResult] = {
+                           cfg: EngineConfig = EngineConfig.defaults): Seq[StageResult] = {
     def st(name: String, critical: Boolean)(df: => DataFrame): StageResult =
       stage(spark, cfg, name, critical, outDir)(df)
     val results = Seq.newBuilder[StageResult]
@@ -405,10 +388,10 @@ object Pipeline {
     results += st("bronze_part", critical = true)(Bronze.part(spark, dir))
     results += st("bronze_orders", critical = false)(Bronze.orders(spark, dir))
     results += st("bronze_lineitem", critical = false)(Bronze.lineitem(spark, dir))
-    // same profile install as the sales pipeline, over the fact tables
+    // the same profile table as the sales pipeline, over the fact tables
     // (supplier/part are unprofiled)
-    results += st("stats_profile_install", critical = false)(
-      installStatsProfile(spark, dir, Seq("orders", "lineitem")))
+    results += st("stats_profile", critical = false)(
+      statsProfile(spark, dir, Seq("orders", "lineitem")))
     // refined, over the written bronze tables (run_supplier_analytics.py:100-102)
     val written = Quality.warehouseTables(spark, outDir)
     results += st("silver_order_details", critical = false)(
@@ -450,7 +433,7 @@ object Pipeline {
     * NB / sampler columns all describe the same text for the same doc_id
     * (ADVICE r9 closed the gates/NB raw-read inconsistency). */
   def runCorpusPipeline(spark: SparkSession, dir: String, outDir: String,
-                        cfg: EngineConfig = EngineConfig.defaults("dev")): Seq[StageResult] = {
+                        cfg: EngineConfig = EngineConfig.defaults): Seq[StageResult] = {
     import org.apache.spark.sql.functions._
     import graft.ext.{Corpus, Pii, Text}
     // publish the env's store geometry / decode knobs before any store is

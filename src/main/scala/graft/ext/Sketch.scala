@@ -88,8 +88,8 @@ object Sketch {
         col("min_value"), col("max_value"))
   }
 
-  /** Profiled (table, column) pairs — the key and measure columns the
-    * planner's join sizing and partition pruning actually consult. */
+  /** Profiled (table, column) pairs — the key and measure columns a
+    * planner sizes joins and prunes partitions by. */
   val ProfiledColumns: Seq[(String, String)] = Seq(
     "orders" -> "o_orderkey",
     "orders" -> "o_custkey",
@@ -112,8 +112,8 @@ object Sketch {
     * promoted to the whole profile. This is what lets the statistics
     * catalog ride the same delta-fold discipline as the revenue states
     * ([[graft.engine.Pipeline.runStatsIncrement]]): stats stay fresh as
-    * batches land, for O(delta) + O(state) per batch, and
-    * [[advisedJoin]] then plans against a profile that never went stale.
+    * batches land, for O(delta) + O(state) per batch, and the drift gates
+    * ([[statsDrift]]) compare versions that never went stale.
     * Contract: append-only deltas (min/max/KMV have no inverse). */
   def statsState(df: DataFrame, table: String, c: String): DataFrame = {
     val stats = df.agg(
@@ -415,56 +415,6 @@ object Sketch {
         s"${r.getAs[String]("table_name")}.${r.getAs[String]("column_name")}: $g")
     }
     require(tripped.isEmpty, s"statistics drift gates tripped: ${tripped.mkString("; ")}")
-  }
-
-  // ------------------------------------------ profile-driven join strategy
-
-  /** Per-table estimated row counts from a materialized profile frame (the
-    * output of [[tableProfile]], possibly read back from the warehouse).
-    * Control-plane collect: the profile has one row per PROFILED COLUMN,
-    * never per data row. */
-  def rowCounts(profile: DataFrame): Map[String, Long] =
-    profile.groupBy("table_name").agg(max("n_rows").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** Estimated in-memory size: profiled row count × schema width
-    * (Catalyst's per-type `defaultSize`, the same width Spark's own
-    * `SizeInBytesOnlyStatsPlanVisitor` multiplies by). */
-  private def estimatedBytes(df: DataFrame, rows: Long): Long =
-    rows * df.schema.fields.map(_.dataType.defaultSize.toLong).sum
-
-  /** Statistics-driven join: the stats catalog made LOAD-BEARING. Consults
-    * the profile for both sides' row counts and
-    *
-    *  - BROADCASTS the smaller side when its estimated bytes fit the
-    *    session's `autoBroadcastJoinThreshold`,
-    *  - otherwise pins SORT-MERGE via the `merge` hint — actively
-    *    overriding Spark's file-size heuristic, because at 100 TB the
-    *    profile knows things scan-size estimation does not (post-filter
-    *    cardinalities, tables behind views, freshly-written partitions
-    *    whose file stats lag).
-    *
-    * The decision comes from the PROFILE in both directions: a table
-    * absent from the profile counts as unbounded (never broadcast — the
-    * safe default for the side you know nothing about). PlanSpec pins the
-    * switch: the same join flips BroadcastHashJoin ↔ SortMergeJoin purely
-    * by what the profile claims, with Spark's own estimates held constant. */
-  def advisedJoin(profile: DataFrame,
-                  left: DataFrame, leftTable: String,
-                  right: DataFrame, rightTable: String,
-                  joinExpr: Column, joinType: String = "inner"): DataFrame = {
-    val counts = rowCounts(profile)
-    val threshold =
-      left.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    def est(df: DataFrame, t: String): Long =
-      counts.get(t).map(estimatedBytes(df, _)).getOrElse(Long.MaxValue)
-    val (el, er) = (est(left, leftTable), est(right, rightTable))
-    if (er <= el && er <= threshold)
-      left.join(broadcast(right), joinExpr, joinType)
-    else if (el < er && el <= threshold)
-      broadcast(left).join(right, joinExpr, joinType)
-    else
-      left.hint("merge").join(right, joinExpr, joinType)
   }
 
   /** ONE-PASS multi-column form of [[profileCol]] (OPTIMIZATION r16, the

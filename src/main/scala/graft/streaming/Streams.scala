@@ -867,9 +867,9 @@ object Streams {
     * per-column stats state ([[graft.ext.Sketch.statsState]] — counts,
     * min/max, the KMV hash set) into the same versioned profile
     * [[graft.engine.Pipeline.runStatsIncrement]] maintains in batch mode.
-    * The stats catalog then tracks a live stream:
-    * [[graft.ext.Sketch.advisedJoin]] plans against a profile as fresh as
-    * the last micro-batch, not the last scheduled ANALYZE. Exactly-once by
+    * The stats catalog then tracks a live stream: the drift gates
+    * ([[graft.ext.Sketch.statsDrift]]) read a profile as fresh as the last
+    * micro-batch, not the last scheduled ANALYZE. Exactly-once by
     * the same batch-tagged version commit as the revenue fold (merge is
     * additive in n_rows — a double fold would inflate counts). Per-batch
     * cost O(batch) + O(state); state is profiled-columns-grain. */

@@ -48,37 +48,52 @@ class PipelineSpec extends SparkSpec {
       s"warehouse DQ disagrees with derived DQ: ${audited.diff(derived)} vs ${derived.diff(audited)}")
   }
 
-  test("sales pipeline installs the measured stats profile: a plain join over " +
-      "the profiled source tables is decided by the catalog, not the file-size heuristic") {
-    import graft.plans.StatsHint
-    import org.apache.spark.sql.catalyst.plans.logical.Join
+  test("sales pipeline writes the stats profile in one pass and installs " +
+      "nothing: it covers the profiled sources, and a plain source join keeps its plan") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val o = graft.engine.Sources.orders(spark, sf)
-    val l = graft.engine.Sources.lineitem(spark, sf)
-    // the silver fact join, with NO hints anywhere in user code
-    def factJoin = o.join(l, o("o_orderkey") === l("l_orderkey"))
-    def joinHints = factJoin.queryExecution.optimizedPlan.collect {
-      case j: Join => j.hint
+    val c = graft.engine.Sources.customer(spark, sf)
+    // a plain join over two profiled source tables, with no hints anywhere
+    def plainJoin = o.join(c, o("o_custkey") === c("c_custkey"))
+      .queryExecution.optimizedPlan.toString
+    val before = plainJoin
+    // records read per job group: each pipeline stage runs in a job group
+    // named after the stage
+    val groupOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val recordsRead = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => e.stageIds.foreach(groupOf.put(_, g)))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (g <- Option(groupOf.get(e.stageId)); m <- Option(e.taskMetrics))
+          recordsRead.merge(g, m.inputMetrics.recordsRead, (a, b) => a + b)
     }
-    StatsHint.uninstall(spark)
-    assert(joinHints.forall(h => h.leftHint.isEmpty && h.rightHint.isEmpty),
-      "clean session must plan with no injected hints")
+    val sc = spark.sparkContext
     val out = Files.createTempDirectory("graft_pipe_stats").toString
-    try {
-      val results = Pipeline.runSalesAnalytics(spark, sf, out)
-      assert(results.exists(r =>
-        r.stage == "stats_profile_install" && r.status == "PASS"))
-      // the profile stage materialized an auditable table with the
-      // measured counts of every profiled source column
-      val prof = spark.read.parquet(s"$out/stats_profile_install")
-      assert(prof.select("table_name").distinct().collect()
-        .map(_.getString(0)).toSet === Set("orders", "lineitem", "customer"))
-      // ... and the SAME plain join is now hint-decided by the catalog:
-      // the rule injected a strategy into the logical Join during this
-      // pipeline's session, which only happens via the installed profile
-      val after = joinHints
-      assert(after.exists(h => h.leftHint.nonEmpty || h.rightHint.nonEmpty),
-        s"profile installed but the silver fact join carries no injected hint: $after")
-    } finally StatsHint.uninstall(spark)
+    sc.addSparkListener(listener)
+    val results = try {
+      val rs = Pipeline.runSalesAnalytics(spark, sf, out)
+      org.apache.spark.graft.SparkBridge.drainListeners(sc)
+      rs
+    } finally sc.removeSparkListener(listener)
+    assert(results.exists(r => r.stage == "stats_profile" && r.status == "PASS"),
+      results.mkString("; "))
+    // the stage wrote an auditable table covering exactly the profiled
+    // sources, each column with its source's row count
+    val sources = Seq("orders", "lineitem", "customer")
+      .map(t => t -> graft.ext.Sketch.sliceSource(spark, sf, t)._1.count()).toMap
+    val nRows = spark.read.parquet(s"$out/stats_profile")
+      .select("table_name", "n_rows").distinct().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(nRows.map(_._1).sorted === sources.keys.toSeq.sorted, nRows.toString)
+    assert(nRows.toMap === sources)
+    // nothing was installed on the session: the same join plans as before
+    assert(plainJoin === before, "the pipeline run changed a plain join's plan")
+    // the profile was computed once, by the stage's write: one read of
+    // every profiled table
+    assert(Option(recordsRead.get("stats_profile")).map(_.longValue) ===
+      Some(sources.values.sum), recordsRead.toString)
   }
 
   test("pipelines build each layer from the written layer below: silver and gold " +
@@ -256,7 +271,7 @@ class PipelineSpec extends SparkSpec {
       spark.conf.set("spark.graft.fpstore.buckets", "16")
       assert(graft.ext.FpStore.storeBuckets(spark, store) === 4)
     } finally {
-      graft.engine.EngineConfig.defaults("dev").applyTo(spark)
+      graft.engine.EngineConfig.defaults.applyTo(spark)
     }
   }
 
@@ -265,7 +280,7 @@ class PipelineSpec extends SparkSpec {
     val results = Pipeline.runSupplierAnalytics(spark, sf, out)
     assert(results.map(_.stage) === Seq(
       "bronze_nation", "bronze_region", "bronze_supplier", "bronze_part",
-      "bronze_orders", "bronze_lineitem", "stats_profile_install",
+      "bronze_orders", "bronze_lineitem", "stats_profile",
       "silver_order_details",
       "silver_supplier_parts", "gold_supplier_performance", "quality_checks"))
     assert(results.forall(_.status == "PASS"))
@@ -425,7 +440,7 @@ class PipelineSpec extends SparkSpec {
 
   test("stage retries with delay and succeeds on a later attempt") {
     val out = Files.createTempDirectory("graft_retry").toString
-    val cfg = engine.EngineConfig.defaults("dev")
+    val cfg = engine.EngineConfig.defaults
       .copy(maxRetryAttempts = 3, retryDelaySeconds = 0.01)
     var calls = 0
     val r = Pipeline.stage(spark, cfg, "flaky", critical = false, out) {
@@ -438,7 +453,7 @@ class PipelineSpec extends SparkSpec {
 
   test("stage times out, cancels its job group, and records FAIL when non-critical") {
     val out = Files.createTempDirectory("graft_timeout").toString
-    val cfg = engine.EngineConfig.defaults("dev")
+    val cfg = engine.EngineConfig.defaults
       .copy(maxRetryAttempts = 1, retryDelaySeconds = 0.01, stageTimeoutSeconds = 1.5)
     val slow = org.apache.spark.sql.functions.udf { n: Long =>
       Thread.sleep(10000); n
@@ -452,13 +467,13 @@ class PipelineSpec extends SparkSpec {
 
   test("EngineConfig loads configs/{env}.json with reference fallback defaults") {
     val prod = engine.EngineConfig.load("prod")
-    assert(prod.maxRetryAttempts === 5 && prod.retryDelaySeconds === 300.0 &&
-      prod.pipelineMode === "continuous" && prod.catalog === "prod_lakehouse")
+    assert(prod.maxRetryAttempts === 5 && prod.retryDelaySeconds === 300.0)
     val dev = engine.EngineConfig.load("dev")
-    assert(dev.maxRetryAttempts === 3 && dev.logLevel === "DEBUG")
+    assert(dev.maxRetryAttempts === 3)
+    assert(engine.EngineConfig.load("stage").retryDelaySeconds === 120.0)
     // unknown configs dir -> inline defaults (reference _context.py:33-43)
     val fb = engine.EngineConfig.load("stage", "/nonexistent")
-    assert(fb.catalog === "stage_lakehouse" && fb.maxRetryAttempts === 3)
+    assert(fb === engine.EngineConfig.defaults && fb.retryDelaySeconds === 60.0)
     intercept[IllegalArgumentException] { engine.EngineConfig.load("qa") }
   }
 

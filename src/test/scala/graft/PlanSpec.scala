@@ -356,68 +356,6 @@ class PlanSpec extends SparkSpec {
     assert(!es.contains("Exchange SinglePartition"), es.take(1200))
   }
 
-  test("stats catalog is load-bearing: the same join flips broadcast <-> " +
-    "sort-merge purely on what the profile claims") {
-    import graft.ext.Sketch
-    import spark.implicits._
-    val o = graft.engine.Sources.orders(spark, sf)
-    val c = graft.engine.Sources.customer(spark, sf)
-    def joined(profile: DataFrame) = Sketch.advisedJoin(profile,
-      o, "orders", c, "customer", o("o_custkey") === c("c_custkey"))
-    def profileClaiming(rows: (String, Long)*) =
-      rows.toSeq.toDF("table_name", "n_rows")
-    // the REAL profile: both fixture tables are tiny -> broadcast chosen
-    val p1 = plan(joined(Sketch.tableProfile(spark, sf)))
-    assert(p1.contains("BroadcastHashJoin"), p1.take(800))
-    // doctored profile claims both sides huge -> the advisor pins SMJ even
-    // though Spark's own file-size estimate would broadcast these tiny
-    // files: the DECISION demonstrably comes from the profile
-    val p2 = plan(joined(profileClaiming("orders" -> 2000000000L,
-      "customer" -> 2000000000L)))
-    assert(p2.contains("SortMergeJoin") && !p2.contains("BroadcastHashJoin"),
-      p2.take(800))
-    // asymmetric claim -> broadcast lands on the side the profile says fits
-    val p3 = plan(joined(profileClaiming("orders" -> 10L,
-      "customer" -> 2000000000L)))
-    assert(p3.contains("BroadcastHashJoin"), p3.take(800))
-    // a table ABSENT from the profile counts as unbounded: never broadcast
-    val p4 = plan(joined(profileClaiming("unrelated" -> 1L)))
-    assert(p4.contains("SortMergeJoin") && !p4.contains("BroadcastHashJoin"),
-      p4.take(800))
-  }
-
-  test("StatsHintRule: an installed profile decides PLAIN joins session-wide; " +
-    "user hints and unprofiled tables stay untouched") {
-    import graft.plans.StatsHint
-    import spark.implicits._
-    val o = graft.engine.Sources.orders(spark, sf)
-    val c = graft.engine.Sources.customer(spark, sf)
-    def plain = o.join(c, o("o_custkey") === c("c_custkey")) // NO hints anywhere
-    try {
-      // profile claims both sides huge -> the rule pins SMJ on a join the
-      // file-size heuristic would broadcast (tiny fixture files)
-      StatsHint.install(spark, Seq(("orders", 2000000000L),
-        ("customer", 2000000000L)).toDF("table_name", "n_rows"))
-      val p1 = plan(plain)
-      assert(p1.contains("SortMergeJoin") && !p1.contains("BroadcastHashJoin"),
-        p1.take(800))
-      // refreshed profile says customer fits -> same code now broadcasts
-      StatsHint.install(spark, Seq(("orders", 2000000000L),
-        ("customer", 50L)).toDF("table_name", "n_rows"))
-      assert(plan(plain).contains("BroadcastHashJoin"))
-      // an explicit user hint is never overridden
-      val hinted = plan(o.hint("merge").join(c, o("o_custkey") === c("c_custkey")))
-      assert(hinted.contains("SortMergeJoin") && !hinted.contains("BroadcastHashJoin"),
-        hinted.take(800))
-      // a join over an unprofiled table keeps Spark's own decision
-      StatsHint.install(spark, Seq(("orders", 2000000000L))
-        .toDF("table_name", "n_rows"))
-      val s = graft.engine.Sources.supplier(spark, sf)
-      val p3 = plan(o.join(s, o("o_custkey") === s("s_suppkey")))
-      assert(p3.contains("BroadcastHashJoin"), p3.take(800)) // tiny files
-    } finally StatsHint.uninstall(spark) // rule stays registered but no-ops
-  }
-
   test("decontaminate: eval n-grams broadcast into a map-side semi-join " +
       "(the corpus n-gram stream is never shuffled)") {
     val p = plan(graft.ext.Text.decontaminate(spark, sf))
