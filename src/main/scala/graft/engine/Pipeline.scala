@@ -3,10 +3,11 @@ package graft.engine
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
 import java.util.concurrent.atomic.AtomicLong
-import scala.concurrent.duration.DurationDouble
-import scala.concurrent.{Await, Future}
+import scala.collection.mutable
+import scala.concurrent.duration.{Duration, DurationDouble}
+import scala.concurrent.{Await, Future, blocking}
 import scala.concurrent.ExecutionContext.Implicits.global
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Sinks
 
@@ -22,9 +23,22 @@ import graft.sources.Sinks
   * all through [[Quality.warehouseTables]] — the same resolver the DQ stage
   * audits through. No stage re-derives a layer it does not write, so the
   * lineitem dedup and the RFM quintiles run once per pipeline, not once per
-  * consumer. Gating matches the reference: DDL + critical facts fail fast,
-  * everything else records its error and continues; a failure summary is
-  * raised at the end (run_sales_analytics.py:143-164).
+  * consumer.
+  *
+  * The reference runs its stages one at a time (run_sales_analytics.py:45-60);
+  * here the sales and supplier pipelines run them in three waves. A wave's
+  * stages share no input and run side by side, one thread each; a wave
+  * starts only after the previous one has ended:
+  *   1. every `bronze_*` stage and `stats_profile` (raw files only);
+  *   2. the `silver_*` stages (written `bronze_*` tables only);
+  *   3. the `gold_*` stages and `quality_checks` (written `bronze_*` /
+  *      `silver_*` tables only — the DQ stage audits no gold table, so it
+  *      runs beside gold).
+  * Results keep declaration order. Gating matches the reference: a failed
+  * critical stage (DDL, critical facts) is rethrown once its wave has ended,
+  * before the next wave starts; everything else records its error and
+  * continues; a failure summary is raised at the end
+  * (run_sales_analytics.py:143-164).
   *
   * Orchestration policy comes from [[EngineConfig]]: each stage is retried
   * `maxRetryAttempts` times with `retryDelaySeconds` between attempts
@@ -46,15 +60,23 @@ object Pipeline {
 
   /** Write `frame` and return the row count from the write-side task metrics
     * (`outputMetrics.recordsWritten`) instead of re-scanning the output —
-    * at 100 TB the old read-back count was a full second pass per stage. */
-  private def writeCounted(frame: DataFrame, path: String,
+    * at 100 TB the old read-back count was a full second pass per stage.
+    * Only tasks of the jobs in job group `group` count: the other stages of
+    * a wave write at the same time. */
+  private def writeCounted(frame: DataFrame, group: String, path: String,
                            partitionBy: Seq[String]): Long = {
     val sc = frame.sparkSession.sparkContext
     val rows = new AtomicLong
+    // touched only by the listener bus thread
+    val ownStages = mutable.Set.empty[Int]
     val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          ownStages ++= js.stageIds
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
-        if (m != null) rows.addAndGet(m.outputMetrics.recordsWritten)
+        if (m != null && ownStages(te.stageId))
+          rows.addAndGet(m.outputMetrics.recordsWritten)
       }
     }
     sc.addSparkListener(listener)
@@ -67,14 +89,17 @@ object Pipeline {
   }
 
   /** Run `body` bounded by `seconds`, cancelling the stage's job group on
-    * timeout so its in-flight Spark jobs are actually killed. */
+    * timeout so its in-flight Spark jobs are actually killed. `body` waits on
+    * Spark jobs, which Spark does not mark `blocking`, so it is marked here:
+    * otherwise the global pool runs at most one body per core and the other
+    * stages of a wave queue behind them. */
   private def withTimeout[T](spark: SparkSession, group: String, seconds: Double)
                             (body: => T): T = {
     val sc = spark.sparkContext
-    val f = Future {
+    val f = Future(blocking {
       sc.setJobGroup(group, s"pipeline stage $group", interruptOnCancel = true)
       try body finally sc.clearJobGroup()
-    }
+    })
     try Await.result(f, seconds.seconds)
     catch {
       case _: java.util.concurrent.TimeoutException =>
@@ -85,8 +110,9 @@ object Pipeline {
 
   /** One pipeline stage: evaluate `df` (re-evaluated per attempt), write it,
     * count rows from write metrics. Retries with delay, bounded by the stage
-    * timeout; critical stages rethrow after the last attempt, non-critical
-    * record FAIL and let the pipeline continue (reference gating). */
+    * timeout; critical stages throw an error naming the stage after the last
+    * attempt, non-critical record FAIL and let the pipeline continue
+    * (reference gating). */
   def stage(spark: SparkSession, cfg: EngineConfig, name: String, critical: Boolean,
             out: String, partitionBy: Seq[String] = Nil)(df: => DataFrame): StageResult = {
     val t0 = System.nanoTime()
@@ -97,7 +123,7 @@ object Pipeline {
       attempt += 1
       try {
         val rows = withTimeout(spark, name, cfg.stageTimeoutSeconds) {
-          writeCounted(df, s"$out/$name", partitionBy)
+          writeCounted(df, name, s"$out/$name", partitionBy)
         }
         return StageResult(name, "PASS", (System.nanoTime() - t0) / 1e9, rows,
           None, attempt)
@@ -108,61 +134,76 @@ object Pipeline {
             Thread.sleep((cfg.retryDelaySeconds * 1000).toLong)
       }
     }
-    if (critical) throw lastErr
+    if (critical)
+      throw new RuntimeException(s"critical stage '$name' failed: ${lastErr.getMessage}", lastErr)
     StageResult(name, "FAIL", (System.nanoTime() - t0) / 1e9, -1,
       Some(lastErr.getMessage), attempt)
   }
 
-  /** The sales pipeline: bronze extracts → silver models → gold views →
+  /** Run the independent stages of one wave side by side, one thread each
+    * (`blocking`: each thread waits on its stage, so the global pool grows
+    * past its core count), and return their results in declaration order
+    * once every stage of the wave has ended. A failed critical stage is
+    * rethrown only then, so no later wave starts over a missing critical
+    * table. */
+  private def wave(stages: (() => StageResult)*): Seq[StageResult] = {
+    val running = stages.map(s => Future(blocking(s())))
+    running.foreach(Await.ready(_, Duration.Inf))
+    running.map(Await.result(_, Duration.Inf))
+  }
+
+  /** The sales pipeline: bronze extracts → silver models → gold views +
     * quality gate, each materialized under `outDir` (order_details
     * partitioned by order_year for downstream pruning, matching the
-    * reference's partition-aware write, refined_order_details.py:112-125). */
+    * reference's partition-aware write, refined_order_details.py:112-125).
+    * The stages run in three waves; a wave's stages share no input and run
+    * side by side, and each wave reads only what earlier waves wrote. */
   def runSalesAnalytics(spark: SparkSession, dir: String, outDir: String,
                         cfg: EngineConfig = EngineConfig.defaults): Seq[StageResult] = {
     def st(name: String, critical: Boolean, partitionBy: Seq[String] = Nil)
-          (df: => DataFrame): StageResult =
-      stage(spark, cfg, name, critical, outDir, partitionBy)(df)
-    val results = Seq.newBuilder[StageResult]
-    // reference data first, then dims, then facts (run_sales_analytics.py:86-100)
-    results += st("bronze_region", critical = true)(Bronze.region(spark, dir))
-    results += st("bronze_nation", critical = true)(Bronze.nation(spark, dir))
-    results += st("bronze_customer", critical = true)(Bronze.customer(spark, dir))
-    results += st("bronze_part", critical = false)(Bronze.part(spark, dir))
-    results += st("bronze_orders", critical = true)(Bronze.orders(spark, dir))
-    results += st("bronze_lineitem", critical = true)(Bronze.lineitem(spark, dir))
-    // profile the source tables this pipeline reads into an auditable
-    // warehouse table; nothing plans against it. Non-critical: a failed
-    // profile fails no layer.
-    results += st("stats_profile", critical = false)(
-      statsProfile(spark, dir, Seq("orders", "lineitem", "customer")))
-    // silver over the written bronze tables (run_sales_analytics.py:109-114)
+          (df: => DataFrame): () => StageResult =
+      () => stage(spark, cfg, name, critical, outDir, partitionBy)(df)
     val written = Quality.warehouseTables(spark, outDir)
-    results += st("silver_order_details", critical = true,
-      partitionBy = Seq("order_year"))(Silver.orderDetails(written))
-    results += st("silver_customer_orders", critical = true)(
-      Silver.customerOrders(written))
-    // gold views over the written silver tables (run_sales_analytics.py:123-125;
-    // no gate). Region/nation/segment come from customer_orders, the
-    // reference's join: every fact row's customer has an order, so it is in
-    // customer_orders exactly when it is in the customer geography.
     def od = written("order_details")
     def co = written("customer_orders")
-    results += st("gold_revenue_by_region", critical = false)(
-      Gold.revenueByRegion(od, co))
-    results += st("gold_customer_lifetime_value", critical = false)(
-      Gold.customerLifetimeValue(co, od))
-    results += st("gold_monthly_sales_trends", critical = false)(
-      Gold.monthlySalesTrends(od))
-    // quality (run_sales_analytics.py:134) — ALL FIVE families
-    // (data_quality_checks.py:27-140), audited over the tables this run just
-    // WROTE (plain parquet scans of outDir), not a re-derivation of silver:
-    // at 100 TB re-deriving silver to check it doubles the pipeline's cost
-    // and verifies a recomputation instead of the actual tables
-    results += st("quality_checks", critical = false)(
-      Quality.overWarehouse(spark, outDir,
-        Seq("orders", "customer", "lineitem", "part",
-          "order_details", "customer_orders")))
-    val out = results.result()
+    // wave 1: reference data, dims and facts, which the reference extracts one
+    // at a time (run_sales_analytics.py:86-100), beside the profile of the
+    // source tables this pipeline reads — an auditable warehouse table that
+    // nothing plans against; non-critical, so a failed profile fails no layer
+    val out = wave(
+      st("bronze_region", critical = true)(Bronze.region(spark, dir)),
+      st("bronze_nation", critical = true)(Bronze.nation(spark, dir)),
+      st("bronze_customer", critical = true)(Bronze.customer(spark, dir)),
+      st("bronze_part", critical = false)(Bronze.part(spark, dir)),
+      st("bronze_orders", critical = true)(Bronze.orders(spark, dir)),
+      st("bronze_lineitem", critical = true)(Bronze.lineitem(spark, dir)),
+      st("stats_profile", critical = false)(
+        statsProfile(spark, dir, Seq("orders", "lineitem", "customer")))) ++
+    // wave 2: silver over the written bronze tables (run_sales_analytics.py:109-114)
+    wave(
+      st("silver_order_details", critical = true,
+        partitionBy = Seq("order_year"))(Silver.orderDetails(written)),
+      st("silver_customer_orders", critical = true)(Silver.customerOrders(written))) ++
+    // wave 3: gold views over the written silver tables
+    // (run_sales_analytics.py:123-125; no gate) beside the quality stage
+    // (run_sales_analytics.py:134). Region/nation/segment come from
+    // customer_orders, the reference's join: every fact row's customer has
+    // an order, so it is in customer_orders exactly when it is in the
+    // customer geography. The quality stage runs ALL FIVE families
+    // (data_quality_checks.py:27-140) over the bronze and silver tables this
+    // run WROTE (plain parquet scans of outDir), not a re-derivation of
+    // silver: at 100 TB re-deriving silver to check it doubles the
+    // pipeline's cost and verifies a recomputation instead of the actual
+    // tables. It reads no gold table, so it runs beside gold.
+    wave(
+      st("gold_revenue_by_region", critical = false)(Gold.revenueByRegion(od, co)),
+      st("gold_customer_lifetime_value", critical = false)(
+        Gold.customerLifetimeValue(co, od)),
+      st("gold_monthly_sales_trends", critical = false)(Gold.monthlySalesTrends(od)),
+      st("quality_checks", critical = false)(
+        Quality.overWarehouse(spark, outDir,
+          Seq("orders", "customer", "lineitem", "part",
+            "order_details", "customer_orders"))))
     val failed = out.filter(_.status == "FAIL")
     require(failed.isEmpty,
       s"pipeline stages failed: ${failed.map(r => s"${r.stage}: ${r.error.getOrElse("?")}").mkString("; ")}")
@@ -373,42 +414,42 @@ object Pipeline {
 
   /** The supplier pipeline (reference: run_supplier_analytics.py:68-126):
     * nation/region reference data, supplier + part dims, the orders/lineitem
-    * facts the scorecard's delivery metrics need, then silver → gold →
+    * facts the scorecard's delivery metrics need, then silver → gold +
     * quality — the full stage list the reference materializes, not just the
-    * supplier-only subset. */
+    * supplier-only subset. Same three waves as [[runSalesAnalytics]]. */
   def runSupplierAnalytics(spark: SparkSession, dir: String, outDir: String,
                            cfg: EngineConfig = EngineConfig.defaults): Seq[StageResult] = {
-    def st(name: String, critical: Boolean)(df: => DataFrame): StageResult =
-      stage(spark, cfg, name, critical, outDir)(df)
-    val results = Seq.newBuilder[StageResult]
-    // extract_nation_region + dims + facts (run_supplier_analytics.py:81-88)
-    results += st("bronze_nation", critical = false)(Bronze.nation(spark, dir))
-    results += st("bronze_region", critical = false)(Bronze.region(spark, dir))
-    results += st("bronze_supplier", critical = true)(Bronze.supplier(spark, dir))
-    results += st("bronze_part", critical = true)(Bronze.part(spark, dir))
-    results += st("bronze_orders", critical = false)(Bronze.orders(spark, dir))
-    results += st("bronze_lineitem", critical = false)(Bronze.lineitem(spark, dir))
-    // the same profile table as the sales pipeline, over the fact tables
-    // (supplier/part are unprofiled)
-    results += st("stats_profile", critical = false)(
-      statsProfile(spark, dir, Seq("orders", "lineitem")))
-    // refined, over the written bronze tables (run_supplier_analytics.py:100-102)
+    def st(name: String, critical: Boolean)(df: => DataFrame): () => StageResult =
+      () => stage(spark, cfg, name, critical, outDir)(df)
     val written = Quality.warehouseTables(spark, outDir)
-    results += st("silver_order_details", critical = false)(
-      Silver.orderDetails(written))
-    results += st("silver_supplier_parts", critical = true)(
-      Silver.supplierParts(written))
-    // gold over the written silver tables + quality
+    // wave 1: extract_nation_region + dims + facts
+    // (run_supplier_analytics.py:81-88) beside the same profile table as the
+    // sales pipeline, over the fact tables (supplier/part are unprofiled)
+    val out = wave(
+      st("bronze_nation", critical = false)(Bronze.nation(spark, dir)),
+      st("bronze_region", critical = false)(Bronze.region(spark, dir)),
+      st("bronze_supplier", critical = true)(Bronze.supplier(spark, dir)),
+      st("bronze_part", critical = true)(Bronze.part(spark, dir)),
+      st("bronze_orders", critical = false)(Bronze.orders(spark, dir)),
+      st("bronze_lineitem", critical = false)(Bronze.lineitem(spark, dir)),
+      st("stats_profile", critical = false)(
+        statsProfile(spark, dir, Seq("orders", "lineitem")))) ++
+    // wave 2: refined, over the written bronze tables (run_supplier_analytics.py:100-102)
+    wave(
+      st("silver_order_details", critical = false)(Silver.orderDetails(written)),
+      st("silver_supplier_parts", critical = true)(Silver.supplierParts(written))) ++
+    // wave 3: gold over the written silver tables beside quality
     // (run_supplier_analytics.py:115-126) — the DQ stage runs every
-    // applicable family over the tables THIS pipeline wrote (no customer →
-    // no orders->customer probe; no customer_orders → no freshness arm)
-    results += st("gold_supplier_performance", critical = false)(
-      Gold.supplierPerformance(written("supplier_parts"), written("order_details")))
-    results += st("quality_checks", critical = false)(
-      Quality.overWarehouse(spark, outDir,
-        Seq("orders", "supplier", "part", "lineitem", "nation", "region",
-          "order_details", "supplier_parts")))
-    val out = results.result()
+    // applicable family over the bronze and silver tables THIS pipeline
+    // wrote (no customer → no orders->customer probe; no customer_orders →
+    // no freshness arm)
+    wave(
+      st("gold_supplier_performance", critical = false)(
+        Gold.supplierPerformance(written("supplier_parts"), written("order_details"))),
+      st("quality_checks", critical = false)(
+        Quality.overWarehouse(spark, outDir,
+          Seq("orders", "supplier", "part", "lineitem", "nation", "region",
+            "order_details", "supplier_parts"))))
     require(!out.exists(_.status == "FAIL"), s"supplier pipeline failed: $out")
     out
   }

@@ -297,6 +297,93 @@ class PipelineSpec extends SparkSpec {
     assert(dq.where(org.apache.spark.sql.functions.col("status") =!= "PASS").count() === 0)
   }
 
+  test("pipelines run each layer as one wave: bronze stages overlap, no silver job " +
+      "starts before the last bronze ends, no gold or DQ job before the last silver ends") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    // (job group, start ms, end ms) of every job run in a job group
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => started.put(e.jobId, g -> e.time))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(started.remove(e.jobId)).foreach { case (g, t0) => jobs.add((g, t0, e.time)) }
+    }
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("graft_pipe_waves").toString
+    def traced(run: => Seq[Pipeline.StageResult]): Seq[(String, Long, Long)] = {
+      sc.addSparkListener(listener)
+      try {
+        run
+        org.apache.spark.graft.SparkBridge.drainListeners(sc)
+      } finally sc.removeSparkListener(listener)
+      val js = jobs.asScala.toSeq
+      jobs.clear()
+      js
+    }
+    val runs = Seq(
+      "sales" -> traced(Pipeline.runSalesAnalytics(spark, sf, s"$out/sales")),
+      "supplier" -> traced(Pipeline.runSupplierAnalytics(spark, sf, s"$out/supplier")))
+    for ((scope, js) <- runs) {
+      def of(prefixes: String*) = js.filter(j => prefixes.exists(j._1.startsWith))
+      val (bronze, silver, top) =
+        (of("bronze_", "stats_"), of("silver_"), of("gold_", "quality_"))
+      assert(bronze.nonEmpty && silver.nonEmpty && top.nonEmpty, s"$scope: $js")
+      val overlapping = for {
+        a <- of("bronze_"); b <- of("bronze_")
+        if a._1 < b._1 && a._2 < b._3 && b._2 < a._3
+      } yield (a._1, b._1)
+      assert(overlapping.nonEmpty, s"$scope: no two bronze stages ran at once: ${of("bronze_")}")
+      assert(silver.map(_._2).min >= bronze.map(_._3).max,
+        s"$scope: a silver job started before wave 1 ended: $js")
+      assert(top.map(_._2).min >= silver.map(_._3).max,
+        s"$scope: a gold or DQ job started before wave 2 ended: $js")
+    }
+  }
+
+  test("pipeline stages count rows from their own jobs only: every stage's rows " +
+      "equal its written table's count") {
+    val out = Files.createTempDirectory("graft_pipe_rows").toString
+    val results =
+      Pipeline.runSalesAnalytics(spark, sf, s"$out/sales").map("sales" -> _) ++
+        Pipeline.runSupplierAnalytics(spark, sf, s"$out/supplier").map("supplier" -> _)
+    results.foreach { case (scope, r) =>
+      assert(r.rows === spark.read.parquet(s"$out/$scope/${r.stage}").count(), s"$scope: $r")
+    }
+  }
+
+  test("a failed critical stage ends its pipeline after its wave: without " +
+      "lineitem, sales writes no silver and supplier no gold") {
+    val noLineitem = Files.createTempDirectory("graft_no_lineitem")
+    new java.io.File(sf).listFiles().filter(_.getName != "lineitem.parquet")
+      .foreach(f => Files.copy(f.toPath, noLineitem.resolve(f.getName)))
+    val cfg = engine.EngineConfig.defaults.copy(maxRetryAttempts = 1)
+    val out = Files.createTempDirectory("graft_pipe_gate").toString
+    def written(scope: String): Seq[String] =
+      Option(new java.io.File(s"$out/$scope").list()).toSeq.flatten.sorted
+    // sales: bronze_lineitem is critical, so the run ends after wave 1; the
+    // other stages of that wave still ran
+    val sales = intercept[RuntimeException] {
+      Pipeline.runSalesAnalytics(spark, noLineitem.toString, s"$out/sales", cfg)
+    }
+    assert(sales.getMessage.contains("bronze_lineitem"), sales.getMessage)
+    assert(!written("sales").exists(_.startsWith("silver_")), written("sales"))
+    assert(written("sales").contains("bronze_orders"), written("sales"))
+    // supplier: bronze_lineitem is non-critical, so wave 2 runs; the
+    // critical silver_supplier_parts reads the bronze_lineitem that was never
+    // written, so the run ends after wave 2
+    val supplier = intercept[RuntimeException] {
+      Pipeline.runSupplierAnalytics(spark, noLineitem.toString, s"$out/supplier", cfg)
+    }
+    assert(supplier.getMessage.contains("silver_supplier_parts") &&
+      supplier.getMessage.contains("bronze_lineitem"), supplier.getMessage)
+    assert(written("supplier").contains("bronze_supplier"), written("supplier"))
+    assert(!written("supplier").exists(n => n.startsWith("gold_") || n == "quality_checks"),
+      written("supplier"))
+  }
+
   test("incremental mode == from-scratch aggregates bit-for-bit; replay no-ops; " +
     "published change feeds reconstruct the profile") {
     import org.apache.spark.sql.functions._
