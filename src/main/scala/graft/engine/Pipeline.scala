@@ -169,12 +169,13 @@ object Pipeline {
     // wave 1: reference data, dims and facts, which the reference extracts one
     // at a time (run_sales_analytics.py:86-100), beside the profile of the
     // source tables this pipeline reads — an auditable warehouse table that
-    // nothing plans against; non-critical, so a failed profile fails no layer
+    // nothing plans against; non-critical, so a failed profile fails no layer.
+    // Every table the critical silver stages read is critical.
     val out = wave(
       st("bronze_region", critical = true)(Bronze.region(spark, dir)),
       st("bronze_nation", critical = true)(Bronze.nation(spark, dir)),
       st("bronze_customer", critical = true)(Bronze.customer(spark, dir)),
-      st("bronze_part", critical = false)(Bronze.part(spark, dir)),
+      st("bronze_part", critical = true)(Bronze.part(spark, dir)),
       st("bronze_orders", critical = true)(Bronze.orders(spark, dir)),
       st("bronze_lineitem", critical = true)(Bronze.lineitem(spark, dir)),
       st("stats_profile", critical = false)(
@@ -191,10 +192,11 @@ object Pipeline {
     // an order, so it is in customer_orders exactly when it is in the
     // customer geography. The quality stage runs ALL FIVE families
     // (data_quality_checks.py:27-140) over the bronze and silver tables this
-    // run WROTE (plain parquet scans of outDir), not a re-derivation of
-    // silver: at 100 TB re-deriving silver to check it doubles the
-    // pipeline's cost and verifies a recomputation instead of the actual
-    // tables. It reads no gold table, so it runs beside gold.
+    // run WROTE, not a re-derivation of silver: at 100 TB re-deriving silver
+    // to check it doubles the pipeline's cost and verifies a recomputation
+    // instead of the actual tables. It reads each written table once and
+    // audits it in one fused aggregate (Quality.allFamiliesOver). It reads no
+    // gold table, so it runs beside gold.
     wave(
       st("gold_revenue_by_region", critical = false)(Gold.revenueByRegion(od, co)),
       st("gold_customer_lifetime_value", critical = false)(
@@ -424,14 +426,15 @@ object Pipeline {
     val written = Quality.warehouseTables(spark, outDir)
     // wave 1: extract_nation_region + dims + facts
     // (run_supplier_analytics.py:81-88) beside the same profile table as the
-    // sales pipeline, over the fact tables (supplier/part are unprofiled)
+    // sales pipeline, over the fact tables (supplier/part are unprofiled).
+    // Every table the critical silver_supplier_parts reads is critical.
     val out = wave(
-      st("bronze_nation", critical = false)(Bronze.nation(spark, dir)),
-      st("bronze_region", critical = false)(Bronze.region(spark, dir)),
+      st("bronze_nation", critical = true)(Bronze.nation(spark, dir)),
+      st("bronze_region", critical = true)(Bronze.region(spark, dir)),
       st("bronze_supplier", critical = true)(Bronze.supplier(spark, dir)),
       st("bronze_part", critical = true)(Bronze.part(spark, dir)),
       st("bronze_orders", critical = false)(Bronze.orders(spark, dir)),
-      st("bronze_lineitem", critical = false)(Bronze.lineitem(spark, dir)),
+      st("bronze_lineitem", critical = true)(Bronze.lineitem(spark, dir)),
       st("stats_profile", critical = false)(
         statsProfile(spark, dir, Seq("orders", "lineitem")))) ++
     // wave 2: refined, over the written bronze tables (run_supplier_analytics.py:100-102)

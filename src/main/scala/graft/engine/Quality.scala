@@ -9,9 +9,12 @@ import org.apache.spark.sql.functions._
   * same check DataFrames (product surface, verified against the oracle) and
   * additionally expose [[Quality.assertAll]] for pipeline gating.
   *
-  * Every family is a UNION of tiny single-row aggregates — each arm is a
-  * full-table aggregate that Spark runs as partial+final with map-side
-  * combine, so the driver only ever sees one row per check at any scale.
+  * Each family function is a UNION of tiny single-row aggregates, one arm
+  * per table it checks. The deployed audit ([[Quality.allFamiliesOver]])
+  * instead resolves each table once and runs ONE aggregate per table that
+  * carries every family's checks of it. Each aggregate runs as partial+final
+  * with map-side combine, so the driver only ever sees one row per table or
+  * check at any scale.
   *
   * Check inputs come through a [[TableResolver]], the engine's one
   * name → table map per side, so the same families run in two modes:
@@ -65,12 +68,17 @@ object Quality {
   def warehouseTables(spark: SparkSession, outDir: String): TableResolver =
     name => spark.read.parquet(s"$outDir/${WarehousePath(name)}")
 
+  /** Check statuses: a table must have rows; a null, orphan or violation
+    * count must be zero. */
+  private def positivePasses(n: Column): Column = when(n > 0, "PASS").otherwise("FAIL")
+  private def zeroPasses(n: Column): Column = when(n === 0, "PASS").otherwise("FAIL")
+
   /** Row-count > 0 gate (reference: data_quality_checks.py:27-44). */
   def rowCountsOver(t: TableResolver, names: Seq[String] = AllTables): DataFrame =
     names.map { name =>
       t(name).agg(count(lit(1)).as("row_count"))
         .select(lit(name).as("table_name"), col("row_count"),
-          when(col("row_count") > 0, "PASS").otherwise("FAIL").as("status"))
+          positivePasses(col("row_count")).as("status"))
     }.reduce(_.unionByName(_)).orderBy("table_name")
 
   def rowCounts(spark: SparkSession, dir: String): DataFrame =
@@ -112,54 +120,61 @@ object Quality {
     NullCheckFamilies.filter(f => names.contains(f._1))
       .map { case (table, checks) => countsInOnePass(t(table), checks, "null_count") }
       .reduce(_.unionByName(_))
-      .withColumn("status", when(col("null_count") === 0, "PASS").otherwise("FAIL"))
+      .withColumn("status", zeroPasses(col("null_count")))
       .orderBy("check_name")
 
   def nullChecks(spark: SparkSession, dir: String): DataFrame =
     nullChecksOver(sourceTables(spark, dir))
 
-  /** Referential-integrity orphan probes (reference's `LEFT JOIN … WHERE
-    * right.key IS NULL`, data_quality_checks.py:73-93). The three lineitem
-    * probes run as ONE pass: left-join the fact to each dimension's distinct
-    * key set (no row multiplication) and count the null sides together —
-    * one fact scan instead of three, dims broadcast. */
+  /** One referential-integrity orphan probe (reference's `LEFT JOIN …
+    * WHERE right.key IS NULL`, data_quality_checks.py:73-93): fact rows
+    * whose `factKey` has no `dimKey` in `dim`. */
+  private case class Probe(fact: String, factKey: String, dim: String, dimKey: String,
+                           name: String, broadcastKeys: Boolean)
+
+  private val RiProbes: Seq[Probe] = Seq(
+    Probe("orders", "o_custkey", "customer", "c_custkey", "orders->customer",
+      broadcastKeys = true),
+    Probe("lineitem", "l_orderkey", "orders", "o_orderkey", "lineitem->orders",
+      broadcastKeys = false),
+    Probe("lineitem", "l_partkey", "part", "p_partkey", "lineitem->part",
+      broadcastKeys = true),
+    Probe("lineitem", "l_suppkey", "supplier", "s_suppkey", "lineitem->supplier",
+      broadcastKeys = true))
+
+  /** The probes of `fact` among the audited tables: a probe exists only when
+    * BOTH sides are audited — a pipeline that doesn't materialize `supplier`
+    * can't (and shouldn't) audit lineitem->supplier. */
+  private def probesOf(fact: String, has: Set[String]): Seq[Probe] =
+    RiProbes.filter(p => p.fact == fact && has(p.fact) && has(p.dim))
+
+  /** `fact` left-joined to the distinct key set of each probed dimension,
+    * with each probe's orphan predicate. A left join to a distinct key set
+    * keeps every fact row exactly once, so every other check over the fact
+    * reads the joined frame unchanged. */
+  private def withProbes(fact: DataFrame, probes: Seq[Probe],
+                         t: TableResolver): (DataFrame, Seq[(String, Column)]) = {
+    val joined = probes.foldLeft(fact) { (df, p) =>
+      val keys = t(p.dim).select(col(p.dimKey).as(s"_k_${p.dim}")).distinct()
+      df.join(if (p.broadcastKeys) broadcast(keys) else keys,
+        col(p.factKey) === col(s"_k_${p.dim}"), "left")
+    }
+    (joined, probes.map(p => p.name -> col(s"_k_${p.dim}").isNull))
+  }
+
+  /** Referential-integrity orphan counts. The three lineitem probes run as
+    * ONE pass: the fact left-joined to each dimension's distinct key set,
+    * the null sides counted together — one fact scan instead of three. */
   def referentialIntegrityOver(t: TableResolver,
                                names: Seq[String] = AllTables): DataFrame = {
     val has = names.toSet
-    def keys(df: DataFrame, c: String, as: String): DataFrame =
-      df.select(col(c).as(as)).distinct()
-    val arms = Seq.newBuilder[DataFrame]
-    // fact->dim probes exist only when BOTH sides are among the audited
-    // tables — a pipeline that doesn't materialize `supplier` can't (and
-    // shouldn't) audit lineitem->supplier
-    if (has("orders") && has("customer"))
-      arms += countsInOnePass(
-        t("orders").join(broadcast(keys(t("customer"), "c_custkey", "_kc")),
-          col("o_custkey") === col("_kc"), "left"),
-        Seq("orders->customer" -> col("_kc").isNull), "orphan_count")
-    if (has("lineitem")) {
-      var probes = t("lineitem")
-      val checks = Seq.newBuilder[(String, Column)]
-      if (has("orders")) {
-        probes = probes.join(keys(t("orders"), "o_orderkey", "_ko"),
-          col("l_orderkey") === col("_ko"), "left")
-        checks += "lineitem->orders" -> col("_ko").isNull
+    RiProbes.map(_.fact).distinct.map(probesOf(_, has)).filter(_.nonEmpty)
+      .map { probes =>
+        val (df, orphans) = withProbes(t(probes.head.fact), probes, t)
+        countsInOnePass(df, orphans, "orphan_count")
       }
-      if (has("part")) {
-        probes = probes.join(broadcast(keys(t("part"), "p_partkey", "_kp")),
-          col("l_partkey") === col("_kp"), "left")
-        checks += "lineitem->part" -> col("_kp").isNull
-      }
-      if (has("supplier")) {
-        probes = probes.join(broadcast(keys(t("supplier"), "s_suppkey", "_ks")),
-          col("l_suppkey") === col("_ks"), "left")
-        checks += "lineitem->supplier" -> col("_ks").isNull
-      }
-      val cs = checks.result()
-      if (cs.nonEmpty) arms += countsInOnePass(probes, cs, "orphan_count")
-    }
-    arms.result().reduce(_.unionByName(_))
-      .withColumn("status", when(col("orphan_count") === 0, "PASS").otherwise("FAIL"))
+      .reduce(_.unionByName(_))
+      .withColumn("status", zeroPasses(col("orphan_count")))
       .orderBy("check_name")
   }
 
@@ -185,19 +200,12 @@ object Quality {
       .map { case (table, checks) => countsInOnePass(t(table), checks, "violation_count") }
       .reduce(_.unionByName(_))
       .withColumnRenamed("check_name", "rule_name")
-      .withColumn("status", when(col("violation_count") === 0, "PASS").otherwise("FAIL"))
+      .withColumn("status", zeroPasses(col("violation_count")))
       .orderBy("rule_name")
 
   def businessRules(spark: SparkSession, dir: String): DataFrame =
     businessRulesOver(sourceTables(spark, dir))
 
-  /** Freshness vs the pinned reference instant (reference:
-    * data_quality_checks.py:123-140: hours since `max(_ingested_at)` /
-    * `max(_refined_at)` on bronze.orders + both silver tables, rounded to one
-    * decimal, PASS under 25 h; `current_timestamp()` is pinned to 2002-01-01
-    * for determinism). The events arm extends the family to the event stream's
-    * own data clock — its staleness is a property of the fixture, not the
-    * pipeline, and is reported deterministically either way. */
   /** (logical table, freshness label, timestamp column) arms the family
     * knows how to audit — restricted by `names` so a pipeline only audits
     * the tables it materialized. */
@@ -207,18 +215,32 @@ object Quality {
     ("customer_orders", "silver.customer_orders", "_refined_at"),
     ("events", "events", "ts"))
 
+  /** Hours from `lastRefresh` to the pinned audit instant
+    * (2002-01-01 00:00:00 UTC), rounded to one decimal; null when the table
+    * is empty. */
+  private def hoursSince(lastRefresh: Column): Column =
+    Num.r1((lit(1009843200L) - unix_timestamp(lastRefresh)) / 3600.0)
+
+  private def freshStatus(hours: Column): Column =
+    when(hours <= 25, "PASS").otherwise("STALE")
+
+  /** Freshness vs the pinned reference instant (reference:
+    * data_quality_checks.py:123-140: hours since `max(_ingested_at)` /
+    * `max(_refined_at)` on bronze.orders + both silver tables, rounded to one
+    * decimal, PASS under 25 h; `current_timestamp()` is pinned to 2002-01-01
+    * for determinism). The events arm extends the family to the event stream's
+    * own data clock — its staleness is a property of the fixture, not the
+    * pipeline, and is reported deterministically either way. */
   def freshnessOver(t: TableResolver,
                     names: Seq[String] = FreshnessArms.map(_._1)): DataFrame = {
-    val pinnedEpoch = lit(1009843200L) // 2002-01-01 00:00:00 UTC
     def arm(name: String, df: DataFrame, tsCol: String): DataFrame =
       df.agg(max(col(tsCol)).as("last_refresh"))
         .select(
           lit("Freshness").as("check_type"),
           lit(name).as("table_name"),
           col("last_refresh"),
-          Num.r1((pinnedEpoch - unix_timestamp(col("last_refresh"))) / 3600.0)
-            .as("hours_since"))
-        .withColumn("status", when(col("hours_since") <= 25, "PASS").otherwise("STALE"))
+          hoursSince(col("last_refresh")).as("hours_since"))
+        .withColumn("status", freshStatus(col("hours_since")))
     FreshnessArms.filter(a => names.contains(a._1))
       .map { case (table, label, tsCol) => arm(label, t(table), tsCol) }
       .reduce(_.unionByName(_))
@@ -235,33 +257,56 @@ object Quality {
     * `names` to the tables the caller materialized; a family with no
     * applicable table contributes no rows. Metric semantics per family:
     * row count / null count / orphan count / violation count / hours since
-    * refresh. */
+    * refresh.
+    *
+    * The reference runs each family as its own scan of every table it
+    * checks. Here each table in `names` is resolved ONCE and audited by ONE
+    * aggregate: its row count, every null and business-rule predicate count,
+    * the max of its freshness timestamp and — for a fact table — the orphan
+    * count of each RI probe (the fact left-joined to the distinct key sets,
+    * which keeps its row count). The single aggregate row is exploded back
+    * into one row per check. The rows equal those of the five `*Over`
+    * family functions reshaped into this form. */
   def allFamiliesOver(t: TableResolver, names: Seq[String]): DataFrame = {
-    def fam(family: String, df: DataFrame, check: String, metric: String): DataFrame =
-      df.select(lit(family).as("family"), col(check).as("check_name"),
-        col(metric).cast("double").as("metric"), col("status"))
-    val arms = Seq.newBuilder[DataFrame]
-    arms += fam("row_counts", rowCountsOver(t, names), "table_name", "row_count")
-    if (NullCheckFamilies.exists(f => names.contains(f._1)))
-      arms += fam("null_checks", nullChecksOver(t, names), "check_name", "null_count")
     val has = names.toSet
-    if ((has("orders") && has("customer")) ||
-        (has("lineitem") && (has("orders") || has("part") || has("supplier"))))
-      arms += fam("referential_integrity", referentialIntegrityOver(t, names),
-        "check_name", "orphan_count")
-    if (RuleFamilies.exists(f => names.contains(f._1)))
-      arms += fam("business_rules", businessRulesOver(t, names), "rule_name", "violation_count")
-    if (FreshnessArms.exists(a => names.contains(a._1)))
-      arms += fam("freshness", freshnessOver(t, names), "table_name", "hours_since")
-    arms.result().reduce(_.unionByName(_)).orderBy("family", "check_name")
+    val frames: TableResolver = names.distinct.map(n => n -> t(n)).toMap
+    names.distinct.map { table =>
+      val (df, orphans) = withProbes(frames(table), probesOf(table, has), frames)
+      def counted(family: String, checks: Seq[(String, Column)]): Seq[Check] =
+        checks.map { case (name, pred) =>
+          Check(family, name, count(when(pred, 1)), identity, zeroPasses)
+        }
+      val checks =
+        Check("row_counts", table, count(lit(1)), identity, positivePasses) +: (
+          counted("null_checks", NullCheckFamilies.filter(_._1 == table).flatMap(_._2)) ++
+          counted("referential_integrity", orphans) ++
+          counted("business_rules", RuleFamilies.filter(_._1 == table).flatMap(_._2)) ++
+          FreshnessArms.filter(_._1 == table).map { case (_, label, tsCol) =>
+            Check("freshness", label, max(col(tsCol)), hoursSince, freshStatus)
+          })
+      val aggs = checks.zipWithIndex.map { case (c, i) => c.agg.as(s"_a$i") }
+      val rows = checks.zipWithIndex.map { case (c, i) =>
+        val metric = c.metric(col(s"_a$i"))
+        struct(lit(c.family).as("family"), lit(c.name).as("check_name"),
+          metric.cast("double").as("metric"), c.status(metric).as("status"))
+      }
+      df.agg(aggs.head, aggs.tail: _*).select(explode(array(rows: _*)).as("r")).select("r.*")
+    }.reduce(_.unionByName(_)).orderBy("family", "check_name")
   }
+
+  /** One check of the fused audit: `agg` over the audited table, the
+    * reported metric of that aggregate, and the status of the metric. */
+  private case class Check(family: String, name: String, agg: Column,
+                           metric: Column => Column, status: Column => Column)
 
   /** The DQ audit a DEPLOYED pipeline runs: EVERY family, evaluated over the
     * tables the pipeline actually wrote under `outDir` (restricted to
-    * `names` — a pipeline only audits the tables it materializes). Inputs
-    * are plain parquet scans of the written outputs — no silver recompute;
-    * the only joins in the plan are the RI orphan probes against distinct
-    * key sets (dims broadcast), exactly what the family means. */
+    * `names` — a pipeline only audits the tables it materializes). Each
+    * written table is read once and audited by one fused aggregate
+    * ([[allFamiliesOver]]), so the plan holds one parquet scan per audited
+    * table plus one per RI key set — no silver recompute; the only joins are
+    * the RI orphan probes against distinct key sets (dims broadcast),
+    * exactly what the family means. */
   def overWarehouse(spark: SparkSession, outDir: String,
                     names: Seq[String]): DataFrame =
     allFamiliesOver(warehouseTables(spark, outDir), names)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned snapshot store — the file-format-free core of table-format time
@@ -10,7 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - every write lands in `path/v=<n>/` (immutable once written)
   *  - `_LATEST` is a one-line pointer file, replaced via write-temp + rename
   *    (atomic on HDFS-like filesystems), so readers resolving the pointer
-  *    never observe a partially-written version
+  *    never observe a partially-written version. Hadoop's rename does not
+  *    overwrite, so the old pointer is deleted first; a crash between the
+  *    delete and the rename leaves only the complete `_LATEST.tmp`, which
+  *    [[latestVersion]] reads as the pointer
   *  - time travel = read a pinned `v=<n>`; rollback = move the pointer (data
   *    is untouched, roll-forward stays possible)
   *
@@ -20,20 +23,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Versioned {
 
   private val Pointer = "_LATEST"
+  private val PointerTmp = s"$Pointer.tmp"
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Highest committed version, if any. */
+  private def readString(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** Highest committed version, if any. Without a pointer, a
+    * newline-terminated (so completely written) `_LATEST.tmp` is the pointer
+    * whose swap a crash interrupted. */
   def latestVersion(spark: SparkSession, path: String): Option[Int] = {
     val f = fs(spark, path)
     val p = new Path(path, Pointer)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toInt)
-      finally in.close()
-    }
+    val tmp = new Path(path, PointerTmp)
+    if (f.exists(p)) Some(readString(f, p).trim.toInt)
+    else if (f.exists(tmp)) Some(readString(f, tmp)).filter(_.endsWith("\n")).map(_.trim.toInt)
+    else None
+  }
+
+  /** Point `_LATEST` at `version`: write the complete pointer to
+    * `_LATEST.tmp`, then delete the old pointer and rename the temp onto it. */
+  private def swapPointer(f: FileSystem, path: String, version: Int): Unit = {
+    val tmp = new Path(path, PointerTmp)
+    val out = f.create(tmp, true)
+    try out.write(s"$version\n".getBytes("UTF-8")) finally out.close()
+    val ptr = new Path(path, Pointer)
+    if (f.exists(ptr)) f.delete(ptr, false)
+    require(f.rename(tmp, ptr), s"pointer swap failed for $path")
   }
 
   /** Highest version DIRECTORY present (≥ the pointer: rollback moves the
@@ -64,12 +84,7 @@ object Versioned {
       val out = f.create(new Path(s"$path/v=$next", "_TAG"), true)
       try out.write(t.getBytes("UTF-8")) finally out.close()
     }
-    val tmp = new Path(path, s"$Pointer.tmp")
-    val out = f.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(path, Pointer)
-    if (f.exists(ptr)) f.delete(ptr, false)
-    require(f.rename(tmp, ptr), s"pointer swap failed for $path")
+    swapPointer(f, path, next)
     next
   }
 
@@ -78,11 +93,7 @@ object Versioned {
     latestVersion(spark, path).flatMap { v =>
       val f = fs(spark, path)
       val p = new Path(s"$path/v=$v", "_TAG")
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-      }
+      if (!f.exists(p)) None else Some(readString(f, p))
     }
 
   /** Read the latest version, or time-travel to a pinned one. */
@@ -97,11 +108,6 @@ object Versioned {
   def rollback(spark: SparkSession, path: String, to: Int): Unit = {
     val f = fs(spark, path)
     require(f.exists(new Path(path, s"v=$to")), s"version $to does not exist at $path")
-    val tmp = new Path(path, s"$Pointer.tmp")
-    val out = f.create(tmp, true)
-    try out.write(to.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(path, Pointer)
-    if (f.exists(ptr)) f.delete(ptr, false)
-    require(f.rename(tmp, ptr), s"pointer swap failed for $path")
+    swapPointer(f, path, to)
   }
 }

@@ -368,20 +368,19 @@ class PipelineSpec extends SparkSpec {
     val sales = intercept[RuntimeException] {
       Pipeline.runSalesAnalytics(spark, noLineitem.toString, s"$out/sales", cfg)
     }
-    assert(sales.getMessage.contains("bronze_lineitem"), sales.getMessage)
+    assert(sales.getMessage.contains("critical stage 'bronze_lineitem' failed"),
+      sales.getMessage)
     assert(!written("sales").exists(_.startsWith("silver_")), written("sales"))
     assert(written("sales").contains("bronze_orders"), written("sales"))
-    // supplier: bronze_lineitem is non-critical, so wave 2 runs; the
-    // critical silver_supplier_parts reads the bronze_lineitem that was never
-    // written, so the run ends after wave 2
+    // supplier: the critical silver_supplier_parts reads bronze_lineitem, so
+    // bronze_lineitem is critical too and the run ends after wave 1
     val supplier = intercept[RuntimeException] {
       Pipeline.runSupplierAnalytics(spark, noLineitem.toString, s"$out/supplier", cfg)
     }
-    assert(supplier.getMessage.contains("silver_supplier_parts") &&
-      supplier.getMessage.contains("bronze_lineitem"), supplier.getMessage)
+    assert(supplier.getMessage.contains("critical stage 'bronze_lineitem' failed"),
+      supplier.getMessage)
     assert(written("supplier").contains("bronze_supplier"), written("supplier"))
-    assert(!written("supplier").exists(n => n.startsWith("gold_") || n == "quality_checks"),
-      written("supplier"))
+    assert(!written("supplier").exists(_.startsWith("silver_")), written("supplier"))
   }
 
   test("incremental mode == from-scratch aggregates bit-for-bit; replay no-ops; " +
@@ -440,6 +439,46 @@ class PipelineSpec extends SparkSpec {
         Versioned.read(spark, s"$out/state_customer_profile")),
       "feed replay")
     o.unpersist()
+  }
+
+  test("a crash between the pointer delete and its rename loses no head: the " +
+      "committed version survives and a replayed batch leaves the state byte-identical") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions._
+    import graft.sources.Versioned
+    val out = Files.createTempDirectory("graft_crash").toString
+    val o = graft.engine.Sources.orders(spark, sf)
+    val early = col("o_orderdate") < lit("1995-01-01")
+    Pipeline.runSalesIncrement(spark, o.where(early), out, 0L)
+    Pipeline.runSalesIncrement(spark, o.where(!early), out, 1L)
+    val stores = Seq("state_monthly_revenue", "state_customer_profile")
+    val committed = stores.map(s => Versioned.latestVersion(spark, s"$out/$s"))
+    assert(committed.forall(_.contains(2)), committed)
+    // every file but the pointer files, by path relative to `out`
+    def state(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(out)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.contains("_LATEST"))
+        .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val before = state()
+    // batch 1's pointer swaps wrote the complete `_LATEST.tmp` and deleted
+    // `_LATEST`, then the process died before the rename
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    stores.zip(committed).foreach { case (s, v) =>
+      val tmp = fs.create(new Path(s"$out/$s", "_LATEST.tmp"), true)
+      try tmp.write(s"${v.get}\n".getBytes("UTF-8")) finally tmp.close()
+      assert(fs.delete(new Path(s"$out/$s", "_LATEST"), false))
+    }
+    assert(stores.map(s => Versioned.latestVersion(spark, s"$out/$s")) === committed)
+    // the replayed batch sees its own commit tag and folds nothing
+    val replay = Pipeline.runSalesIncrement(spark, o.where(!early), out, 1L)
+    assert(replay.forall(_.rows == 0L), replay.mkString("; "))
+    assert(stores.map(s => Versioned.latestVersion(spark, s"$out/$s")) === committed)
+    assert(state() === before, "replay changed the state files")
   }
 
   test("supplier incremental mode: folded bridge reproduces the full silver " +
@@ -523,6 +562,64 @@ class PipelineSpec extends SparkSpec {
     }
     val e2 = intercept[IllegalArgumentException] { Q.assertAllOver(stale, names) }
     assert(e2.getMessage.contains("freshness"), e2.getMessage)
+  }
+
+  test("fused DQ audit equals the five family functions row for row, on the " +
+      "fixture and on an empty, an all-null and an orphaned input") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.functions._
+    val Q = graft.engine.Quality
+    val base = Q.sourceTables(spark, sf)
+    // the five public family functions, reshaped into the audit's
+    // (family, check_name, metric, status) rows
+    def families(t: Q.TableResolver, names: Seq[String]): Seq[Row] = {
+      def fam(family: String, df: DataFrame, check: String, metric: String): DataFrame =
+        df.select(lit(family).as("family"), col(check).as("check_name"),
+          col(metric).cast("double").as("metric"), col("status"))
+      Seq(
+        fam("row_counts", Q.rowCountsOver(t, names), "table_name", "row_count"),
+        fam("null_checks", Q.nullChecksOver(t, names), "check_name", "null_count"),
+        fam("referential_integrity", Q.referentialIntegrityOver(t, names),
+          "check_name", "orphan_count"),
+        fam("business_rules", Q.businessRulesOver(t, names), "rule_name", "violation_count"),
+        fam("freshness", Q.freshnessOver(t, names), "table_name", "hours_since"))
+        .reduce(_.unionByName(_)).orderBy("family", "check_name").collect().toSeq
+    }
+    def check(t: Q.TableResolver, names: Seq[String], what: String): Seq[Row] = {
+      val fused = Q.allFamiliesOver(t, names).collect().toSeq
+      assert(fused === families(t, names), what)
+      fused
+    }
+    def row(rows: Seq[Row], family: String, name: String): Row =
+      rows.find(r => r.getString(0) == family && r.getString(1) == name).get
+    val sales = Seq("orders", "customer", "lineitem", "part",
+      "order_details", "customer_orders")
+    check(base, Q.AllTables :+ "events", "fixture, every table")
+    check(base, Seq("orders", "supplier", "part", "lineitem", "nation", "region",
+      "order_details", "supplier_parts"), "fixture, supplier tables")
+    val empty = check({
+      case "orders" => base("orders").limit(0)
+      case other => base(other)
+    }, sales, "empty orders")
+    assert(row(empty, "row_counts", "orders") === Row("row_counts", "orders", 0.0, "FAIL"))
+    assert(row(empty, "freshness", "bronze.orders") ===
+      Row("freshness", "bronze.orders", null, "STALE"))
+    val allNull = check({
+      case "customer_orders" => base("customer_orders")
+        .withColumn("customer_segment", lit(null).cast("string"))
+      case other => base(other)
+    }, sales, "all-null customer_segment")
+    val nCustomers = base("customer_orders").count().toDouble
+    assert(row(allNull, "null_checks", "customer_orders.customer_segment") ===
+      Row("null_checks", "customer_orders.customer_segment", nCustomers, "FAIL"))
+    val orphaned = check({
+      case "orders" => base("orders").unionByName(
+        base("orders").limit(3).withColumn("o_custkey",
+          lit(999999999L).cast(base("orders").schema("o_custkey").dataType)))
+      case other => base(other)
+    }, sales, "orphan o_custkey")
+    assert(row(orphaned, "referential_integrity", "orders->customer") ===
+      Row("referential_integrity", "orders->customer", 3.0, "FAIL"))
   }
 
   test("stage retries with delay and succeeds on a later attempt") {

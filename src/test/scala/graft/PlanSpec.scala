@@ -48,6 +48,25 @@ class PlanSpec extends SparkSpec {
     assert(lineitemScans === 1, s"lineitem scanned $lineitemScans times")
   }
 
+  test("DQ audit over written tables: one parquet scan per audited table plus " +
+      "one per RI key set") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dq_plan").toString
+    val base = Quality.sourceTables(spark, sf)
+    val silver = Set("order_details", "customer_orders", "supplier_parts")
+    Quality.AllTables.foreach { n =>
+      base(n).write.parquet(s"$dir/${if (silver(n)) "silver" else "bronze"}_$n")
+    }
+    def scans(names: Seq[String]): Int =
+      "FileScan parquet".r.findAllIn(plan(Quality.overWarehouse(spark, dir, names))).length
+    // sales: 6 tables + the customer, orders and part key sets (19 scans when
+    // every check family read its tables again)
+    assert(scans(Seq("orders", "customer", "lineitem", "part",
+      "order_details", "customer_orders")) === 9)
+    // supplier: 8 tables + the orders, part and supplier key sets (was 18)
+    assert(scans(Seq("orders", "supplier", "part", "lineitem", "nation", "region",
+      "order_details", "supplier_parts")) === 11)
+  }
+
   test("bucketed tables join without any exchange") {
     val o = graft.engine.Bronze.orders(spark, sf).select("o_orderkey", "o_totalprice")
     val l = graft.engine.Bronze.lineitem(spark, sf).select("l_orderkey", "l_quantity")
