@@ -1,6 +1,6 @@
 package graft.engine
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.io.File
 
 /** Environment configuration — the reference's `_context` widget + JSON layer
@@ -8,42 +8,18 @@ import java.io.File
   * validates env ∈ {dev, stage, prod}, and falls back to inline defaults;
   * configs/dev.json:1-12 and prod.json carry the retry policy).
   *
-  * Only the settings the engine reads are kept: the stage retry/timeout
-  * policy and the store geometry. The reference's catalog, schema, pipeline
-  * mode and log level name Unity Catalog objects and cluster settings; in
-  * this file-based lake the output directory is the namespace, so they
-  * have no reader here.
+  * Only the stage retry/timeout policy is kept: it is the one setting the
+  * engine reads. The reference's catalog, schema, pipeline mode and log
+  * level name Unity Catalog objects and cluster settings; in this
+  * file-based lake the output directory is the namespace, so they have no
+  * reader here. Store geometry is no setting either: every persisted store
+  * fixes its bucket count at creation (see
+  * [[graft.ext.VectorIndex.geometryBuckets]]).
   */
 final case class EngineConfig(
     maxRetryAttempts: Int,
     retryDelaySeconds: Double,
-    stageTimeoutSeconds: Double,
-    // store geometry + decode fan-out (VERDICT r11 #5): per-env knobs the
-    // reference drives from configs/{env}.json; at 100 TB set the bucket
-    // counts ≈ cluster cores. Geometry binds at store CREATION (recorded in
-    // the store's _GEOMETRY file) — see graft.ext.VectorIndex.geometryBuckets.
-    fpStoreBuckets: Int = 8,
-    vecIndexBuckets: Int = 8,
-    textIndexBuckets: Int = 8,
-    decodeParallelism: Option[Int] = None) {
-
-  /** Publish the geometry/decode knobs as session confs — the indirection
-    * the persisted stores ([[graft.ext.FpStore]]/[[graft.ext.VectorIndex]]/
-    * [[graft.ext.TextIndex]]) and the batch decode arms
-    * ([[graft.ext.Multimodal.decodeParts]]) read. Pipelines call this once
-    * at entry, so a `configs/{env}.json` geometry reaches every store the
-    * run creates. */
-  def applyTo(spark: org.apache.spark.sql.SparkSession): EngineConfig = {
-    spark.conf.set("spark.graft.fpstore.buckets", fpStoreBuckets.toString)
-    spark.conf.set("spark.graft.vecindex.buckets", vecIndexBuckets.toString)
-    spark.conf.set("spark.graft.textindex.buckets", textIndexBuckets.toString)
-    decodeParallelism match {
-      case Some(n) => spark.conf.set("spark.graft.decode.parallelism", n.toString)
-      case None => spark.conf.unset("spark.graft.decode.parallelism")
-    }
-    this
-  }
-}
+    stageTimeoutSeconds: Double)
 
 object EngineConfig {
   val ValidEnvs: Seq[String] = Seq("dev", "stage", "prod")
@@ -56,7 +32,13 @@ object EngineConfig {
     retryDelaySeconds = 60,
     stageTimeoutSeconds = 3600)
 
-  /** Load `configsDir/{env}.json`, overlaying file values on [[defaults]]. */
+  /** Load `configsDir/{env}.json`, overlaying file values on [[defaults]].
+    * The file comes from outside the program, so each value present must be
+    * a JSON number in range (retries an integer ≥ 1, delay ≥ 0 s, timeout
+    * > 0 s); an error names the key and the file. Unchecked, a negative
+    * delay throws from `Thread.sleep` inside [[Pipeline.stage]]'s retry
+    * path, a zero timeout fails every stage at once, and a string reads as
+    * 0. */
   def load(env: String, configsDir: String = "configs"): EngineConfig = {
     require(ValidEnvs.contains(env),
       s"Invalid environment '$env'. Must be one of: ${ValidEnvs.mkString(", ")}")
@@ -65,18 +47,21 @@ object EngineConfig {
     if (!f.isFile) d
     else {
       val n = new ObjectMapper().readTree(f)
-      def num(k: String, dv: Double) = if (n.hasNonNull(k)) n.get(k).asDouble() else dv
+      def num(k: String, dv: Double, rule: String)(ok: JsonNode => Boolean): Double =
+        if (!n.hasNonNull(k)) dv
+        else {
+          val v = n.get(k)
+          require(v.isNumber && java.lang.Double.isFinite(v.asDouble()) && ok(v),
+            s"$f: '$k' must be $rule, got $v")
+          v.asDouble()
+        }
       EngineConfig(
-        maxRetryAttempts = num("max_retry_attempts", d.maxRetryAttempts).toInt,
-        retryDelaySeconds = num("retry_delay_seconds", d.retryDelaySeconds),
-        stageTimeoutSeconds = num("stage_timeout_seconds", d.stageTimeoutSeconds),
-        fpStoreBuckets = num("fpstore_buckets", d.fpStoreBuckets).toInt,
-        vecIndexBuckets = num("vecindex_buckets", d.vecIndexBuckets).toInt,
-        textIndexBuckets = num("textindex_buckets", d.textIndexBuckets).toInt,
-        decodeParallelism =
-          if (n.hasNonNull("decode_parallelism"))
-            Some(n.get("decode_parallelism").asInt())
-          else d.decodeParallelism)
+        maxRetryAttempts = num("max_retry_attempts", d.maxRetryAttempts,
+          "an integer >= 1")(v => v.canConvertToInt && v.isIntegralNumber && v.asInt() >= 1).toInt,
+        retryDelaySeconds = num("retry_delay_seconds", d.retryDelaySeconds,
+          "a number >= 0")(_.asDouble() >= 0),
+        stageTimeoutSeconds = num("stage_timeout_seconds", d.stageTimeoutSeconds,
+          "a number > 0")(_.asDouble() > 0))
     }
   }
 }

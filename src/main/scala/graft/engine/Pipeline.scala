@@ -480,10 +480,6 @@ object Pipeline {
                         cfg: EngineConfig = EngineConfig.defaults): Seq[StageResult] = {
     import org.apache.spark.sql.functions._
     import graft.ext.{Corpus, Pii, Text}
-    // publish the env's store geometry / decode knobs before any store is
-    // created (VERDICT r11 #5): configs/{env}.json reaches every persisted
-    // index this run builds
-    cfg.applyTo(spark)
     def st(name: String, critical: Boolean)(df: => DataFrame): StageResult =
       stage(spark, cfg, name, critical, outDir)(df)
     val results = Seq.newBuilder[StageResult]

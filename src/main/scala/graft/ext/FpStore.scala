@@ -50,19 +50,11 @@ import org.apache.spark.sql.functions._
   * construction. */
 object FpStore {
 
-  /** Default bucket count of the fps tables — the store's on-disk
-    * parallelism. Overridable per env: `spark.graft.fpstore.buckets`
-    * (wired from `configs/{env}.json` via [[graft.engine.EngineConfig]];
-    * at 100 TB pick ≈ cluster cores). Geometry binds at store CREATION and
-    * is recorded in the store's `_GEOMETRY` file — an existing store keeps
-    * the bucket count it was written with regardless of later conf (a
-    * bucketed table whose physical layout disagrees with its declared
-    * bucket count would silently mis-distribute every exchange-free read). */
-  val DefaultStoreBuckets = 8
-
+  /** Bucket count of the fps tables — the store's on-disk parallelism,
+    * fixed at store CREATION and recorded in its `_GEOMETRY` file (the one
+    * rule of every persisted store: [[VectorIndex.geometryBuckets]]). */
   def storeBuckets(spark: SparkSession, storePath: String): Int =
-    VectorIndex.geometryBuckets(spark, storePath,
-      "spark.graft.fpstore.buckets", DefaultStoreBuckets)
+    VectorIndex.geometryBuckets(spark, storePath)
 
   private[graft] def fpTable(storePath: String, modality: String): String =
     s"graft_media_fps_${modality}_" + VectorIndex.sha12(storePath)

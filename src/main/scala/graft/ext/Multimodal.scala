@@ -560,17 +560,13 @@ object Multimodal {
     * streaming gates ([[graft.streaming.Streams]] passes the same), so
     * batch and streaming agree at ANY cluster size (ADVICE r11 dropped the
     * r11 shuffle.partitions clamp, which silently capped batch decode at
-    * 200 tasks on large clusters). `spark.graft.decode.parallelism`
-    * overrides when set (wired from `configs/{env}.json` via
-    * [[graft.engine.EngineConfig]]). Through r10 this was a hardcoded 8:
+    * 200 tasks on large clusters). Through r10 this was a hardcoded 8:
     * every batch decode ran in exactly 8 tasks regardless of cluster size —
     * the one knob that would have serialized the byte-bound decode floor
     * on a real cluster. Partition count never changes results here: dup
     * pairs come from key-joins on fingerprints and every downstream sum is
     * integer or decimal-exact (order-free). */
-  def decodeParts(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.decode.parallelism").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+  def decodeParts(spark: SparkSession): Int = spark.sparkContext.defaultParallelism
 
   /** Batched decode/feature-extract: the mapInPandas twin — each partition's
     * rows are fed to the codec [[DecodeBatch]] at a time. Every kind runs a

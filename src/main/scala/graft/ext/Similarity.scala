@@ -861,28 +861,10 @@ object Similarity {
     * (256 is the usual production pick; 16 keeps every level exercised at
     * the test SFs — with n=500, 16 cells × 2 sub-cells each.)
     *
-    * Deployment tuning knob: `GRAFT_HIER_K1` overrides K₁ for a scale run
-    * (read once at class load; the oracle twin reads the SAME value, so
-    * parity holds at any setting — SCALING_r10 re-audits recall at the
-    * production 256 on sf1). The override is VALIDATED at load (ADVICE
-    * r10): a stray shell export must fail fast with the offending value,
-    * not re-shape index geometry silently or surface as a k-means error
-    * three stages later — and any deviation from the 16-cell fixture
-    * default is announced on stderr so a test run under an override is
-    * visibly non-standard. */
-  val HierTopCells: Int = sys.env.get("GRAFT_HIER_K1") match {
-    case None => 16
-    case Some(s) =>
-      val k = try s.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"GRAFT_HIER_K1 must be a positive integer, got '$s'")
-      }
-      require(k > 0 && k <= (1 << 16),
-        s"GRAFT_HIER_K1 out of range (1..65536): $k")
-      if (k != 16)
-        System.err.println(s"graft: hier-IVF K1 overridden to $k (default 16)")
-      k
-  }
+    * The oracle twin ([[graft.OraclesExt]]) reads this same constant, so
+    * parity holds by construction (SCALING_r10 audited recall at the
+    * production 256 on sf1). */
+  val HierTopCells = 16
 
   /** L1 cells probed per vector: its sub-cell candidate set is the union of
     * the sub-centroids of this many nearest top-level cells. Bounds probe

@@ -18,7 +18,7 @@ import graft.engine.Sources
   * Store layout under `storePath`:
   *   - `postings/` — (token, doc_id, tf, dl) per document-term, an external
   *     table PARTITIONED BY (batch), CLUSTERED BY (token) INTO
-  *     [[IndexBuckets]] buckets
+  *     [[VectorIndex.geometryBuckets]] buckets
   *   - `stats/`    — one (n, t) row per batch: documents and total token
   *     mass. ADDITIVE, so corpus-level N and T are a sum over live rows —
   *     the same mergeable-state recipe as the statistics catalog.
@@ -35,13 +35,6 @@ import graft.engine.Sources
   */
 object TextIndex {
 
-  /** Default bucket count of the postings table — the store's fixed
-    * on-disk parallelism; at 100 TB pick ≈ cluster cores (override:
-    * `spark.graft.textindex.buckets`, wired from `configs/{env}.json` via
-    * [[graft.engine.EngineConfig]]; binds at store creation — see
-    * [[VectorIndex.geometryBuckets]]). */
-  val IndexBuckets = 8
-
   private[graft] def postingsTable(storePath: String): String =
     "graft_text_postings_" + VectorIndex.sha12(storePath)
   private[graft] def statsTable(storePath: String): String =
@@ -51,8 +44,8 @@ object TextIndex {
     val pTbl = postingsTable(storePath)
     val sTbl = statsTable(storePath)
     val fs = VectorIndex.fsOf(spark, storePath)
-    def buckets = VectorIndex.geometryBuckets(spark, storePath,
-      "spark.graft.textindex.buckets", IndexBuckets)
+    // the postings table's on-disk parallelism, fixed at store creation
+    def buckets = VectorIndex.geometryBuckets(spark, storePath)
     if (!spark.catalog.tableExists(pTbl)) {
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$storePath/postings"))
       spark.sql(

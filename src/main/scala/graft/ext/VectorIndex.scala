@@ -20,7 +20,7 @@ import Similarity._
   *   - `meta/`  — one row: calibrated n_probe, k2, corpus n at build
   *   - `lists/` — inverted lists (cl, neighbor_id, vb, nb), an external
   *     table PARTITIONED BY (batch) and CLUSTERED BY (cl) INTO
-  *     [[IndexBuckets]] BUCKETS — the same store discipline as the
+  *     [[geometryBuckets]] BUCKETS — the same store discipline as the
   *     streaming LSH band store ([[graft.streaming.Streams]]): per-batch
   *     partitions make replays idempotent (dynamic overwrite rewrites one
   *     partition, never history), and bucketing on the join key means every
@@ -44,45 +44,46 @@ import Similarity._
   */
 object VectorIndex {
 
-  /** Default bucket count of the inverted-list table. Like the band
-    * store's, this is the store's fixed parallelism on disk; at 100 TB pick
-    * ≈ cluster cores (override: `spark.graft.vecindex.buckets`, wired from
-    * `configs/{env}.json` via [[graft.engine.EngineConfig]]). Test value
-    * keeps bucket files small at fixture SF. */
-  val IndexBuckets = 8
+  /** Floor of a new store's bucket count, shared by every persisted store
+    * here, so tiny test sessions keep their historical geometry; see
+    * [[geometryBuckets]]. */
+  private val MinStoreBuckets = 8
 
-  /** Store-geometry resolution shared by every persisted store here
-    * ([[VectorIndex]]/[[VectorIndexPq]]/[[TextIndex]]/[[FpStore]], VERDICT
-    * r11 #5): the bucket count binds at store CREATION and is recorded in
+  /** The one geometry rule of every persisted store here
+    * ([[VectorIndex]]/[[VectorIndexPq]]/[[TextIndex]]/[[FpStore]]): the
+    * bucket count binds at store CREATION and is recorded in
     * `<store>/_GEOMETRY`; an EXISTING store always reads back its recorded
-    * value — a session conf can never re-declare a bucketed table at a
-    * count its physical files disagree with (which would silently
-    * mis-distribute every exchange-free read). New stores take the session
-    * conf `confKey` (set per env from `configs/{env}.json`), else the
-    * SESSION-DERIVED default: max(`default`, defaultParallelism)
-    * (OPTIMIZATION r16). The bucket count is the store's on-disk
-    * parallelism — every exchange-free probe/scoring stage runs in exactly
-    * this many tasks — and each store's doc already said "at 100 TB pick
-    * ≈ cluster cores"; a constant 8 was tuned for neither local mode nor a
-    * cluster (measured: the BM25 scoring stage ran 8 tasks on 32 cores —
-    * 1.78 s of a 2.6 s search). Deriving from the session makes the same
-    * build land right at any scale; `default` stays as the floor so tiny
-    * test sessions keep their historical geometry. */
-  private[graft] def geometryBuckets(spark: SparkSession, storePath: String,
-                                     confKey: String, default: Int): Int = {
+    * value, so no later session re-declares a bucketed table at a count its
+    * physical files disagree with (which would silently mis-distribute
+    * every exchange-free read). A new store records
+    * max([[MinStoreBuckets]], defaultParallelism): the bucket count is the
+    * store's on-disk parallelism — every exchange-free probe/scoring stage
+    * runs in exactly this many tasks (measured: a constant 8 ran the BM25
+    * scoring stage in 8 tasks on 32 cores — 1.78 s of a 2.6 s search).
+    *
+    * The record is written to `_GEOMETRY.tmp` and renamed onto `_GEOMETRY`,
+    * so a crash leaves either no record (a stale `.tmp` is overwritten on
+    * the next open) or a whole one. Where rename does not overwrite (the
+    * Hadoop FileSystem contract) and a concurrent creator won, its value is
+    * read back. A record that is not a positive integer fails naming the
+    * file. */
+  private[graft] def geometryBuckets(spark: SparkSession, storePath: String): Int = {
     val fs = fsOf(spark, storePath)
     val p = new org.apache.hadoop.fs.Path(storePath, "_GEOMETRY")
-    if (fs.exists(p)) {
+    def recorded: Int = {
       val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
-    } else {
-      val buckets = spark.conf.getOption(confKey).map(_.toInt)
-        .getOrElse(math.max(default, spark.sparkContext.defaultParallelism))
-      require(buckets > 0, s"$confKey must be positive, got $buckets")
-      fs.mkdirs(new org.apache.hadoop.fs.Path(storePath))
-      val out = fs.create(p, true)
+      val s = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+      s.toIntOption.filter(_ > 0).getOrElse(throw new IllegalStateException(
+        s"$p: store geometry must be a positive bucket count, got '$s'"))
+    }
+    if (fs.exists(p)) recorded
+    else {
+      val buckets = math.max(MinStoreBuckets, spark.sparkContext.defaultParallelism)
+      val tmp = new org.apache.hadoop.fs.Path(storePath, "_GEOMETRY.tmp")
+      val out = fs.create(tmp, true)
       try out.write(buckets.toString.getBytes("UTF-8")) finally out.close()
-      buckets
+      if (fs.rename(tmp, p)) buckets
+      else { fs.delete(tmp, false); recorded }
     }
   }
 
@@ -110,8 +111,7 @@ object VectorIndex {
   private def ensureListsTable(spark: SparkSession, storePath: String): String = {
     val tbl = listsTable(storePath)
     if (!spark.catalog.tableExists(tbl)) {
-      val buckets = geometryBuckets(spark, storePath,
-        "spark.graft.vecindex.buckets", IndexBuckets)
+      val buckets = geometryBuckets(spark, storePath)
       fsOf(spark, storePath)
         .mkdirs(new org.apache.hadoop.fs.Path(s"$storePath/lists"))
       spark.sql(
@@ -263,7 +263,7 @@ object VectorIndex {
 
   /** Compact every live batch partition with id ≤ `upTo` into one fresh
     * compacted-generation partition — the small-file fix for continuous
-    * ingest, which otherwise accretes one partition (× [[IndexBuckets]]
+    * ingest, which otherwise accretes one partition (× [[geometryBuckets]]
     * files) per micro-batch forever. Commit protocol:
     *
     *   1. write the live rows with batch ≤ upTo into partition

@@ -25,7 +25,7 @@ import Similarity._
   *     [[Pq.Books]] (parquet round-trips doubles exactly, so the loaded
   *     books encode and ADC-score bit-identically to the in-memory ones)
   *   - `lists/` — (cl, neighbor_id, codes, rnorm), PARTITIONED BY (batch)
-  *     and CLUSTERED BY (cl) INTO [[VectorIndex.IndexBuckets]] BUCKETS: the
+  *     and CLUSTERED BY (cl) INTO [[VectorIndex.geometryBuckets]] BUCKETS: the
   *     probe join reads the store side already hash-distributed on the cell
   *     id — NO exchange on the (huge) list side at any index size
   *   - `vectors/` — (vec_id, v, norm), PARTITIONED BY (batch) and CLUSTERED
@@ -50,7 +50,7 @@ import Similarity._
   */
 object VectorIndexPq {
 
-  import VectorIndex.{IndexBuckets, sha12, fsOf, compactState, livePred}
+  import VectorIndex.{sha12, fsOf, compactState, livePred}
 
   /** Catalog names — 96-bit path hash, same reasoning as
     * [[VectorIndex.listsTable]]. */
@@ -62,10 +62,9 @@ object VectorIndexPq {
   private def ensureTables(spark: SparkSession, storePath: String): (String, String) = {
     val lt = listsTable(storePath)
     val vt = vecsTable(storePath)
-    // geometry binds at creation (recorded in _GEOMETRY), conf seeds new
-    // stores — see [[VectorIndex.geometryBuckets]]
-    def buckets = VectorIndex.geometryBuckets(spark, storePath,
-      "spark.graft.vecindex.buckets", IndexBuckets)
+    // geometry binds at store creation (recorded in _GEOMETRY) — see
+    // [[VectorIndex.geometryBuckets]]
+    def buckets = VectorIndex.geometryBuckets(spark, storePath)
     if (!spark.catalog.tableExists(lt)) {
       fsOf(spark, storePath)
         .mkdirs(new org.apache.hadoop.fs.Path(s"$storePath/lists"))

@@ -238,41 +238,46 @@ class PipelineSpec extends SparkSpec {
     assert(!zOk && zPct === 0L)
   }
 
-  test("store geometry comes from configs/{env}.json (VERDICT r11 #5): " +
-      "non-default buckets reach a NEW store; an existing store keeps its " +
-      "recorded geometry regardless of conf") {
-    val cfgDir = Files.createTempDirectory("graft_cfg").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(cfgDir, "stage.json"),
-      """{"fpstore_buckets": 4, "vecindex_buckets": 16,
-        | "textindex_buckets": 4, "decode_parallelism": 12}""".stripMargin)
-    val cfg = graft.engine.EngineConfig.load("stage", cfgDir)
-    assert(cfg.fpStoreBuckets === 4 && cfg.vecIndexBuckets === 16 &&
-      cfg.textIndexBuckets === 4 && cfg.decodeParallelism === Some(12))
-    cfg.applyTo(spark)
-    try {
-      assert(graft.ext.Multimodal.decodeParts(spark) === 12)
+  test("a store's geometry is fixed at creation: a fresh store records " +
+      "max(8, defaultParallelism), a recorded _GEOMETRY is read back and laid out " +
+      "on disk; a stale _GEOMETRY.tmp is overwritten, an empty _GEOMETRY fails naming it") {
+    import java.nio.file.Paths
+    def storeDir(files: (String, String)*): String = {
       val store = Files.createTempDirectory("graft_geo").toString + "/fp"
-      graft.ext.FpStore.build(spark, store, sf).collect()
-      val tbl = spark.sql(
-        s"DESCRIBE TABLE EXTENDED ${graft.ext.FpStore.fpTable(store, "image")}")
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(tbl.get("Num Buckets").contains("4"), tbl.toString)
-      // physical layout agrees: every data file carries one of exactly 4
-      // bucket ids (one file per task × bucket; the _NNNNN suffix is the
-      // bucket id)
-      val bucketIds = new java.io.File(s"$store/fps/modality=image/batch=0")
-        .listFiles().map(_.getName).filter(_.endsWith(".parquet"))
-        .flatMap("_(\\d{5})\\.c000".r.findFirstMatchIn(_).map(_.group(1).toInt))
-        .toSet
-      assert(bucketIds === Set(0, 1, 2, 3), s"bucket ids: $bucketIds")
-      // an EXISTING store is immune to a later conf change (geometry is
-      // recorded at creation — _GEOMETRY wins over session conf)
-      spark.conf.set("spark.graft.fpstore.buckets", "16")
-      assert(graft.ext.FpStore.storeBuckets(spark, store) === 4)
-    } finally {
-      graft.engine.EngineConfig.defaults.applyTo(spark)
+      Files.createDirectories(Paths.get(store))
+      files.foreach { case (name, body) => Files.writeString(Paths.get(store, name), body) }
+      store
     }
+    // fresh store (only a torn write's leftover .tmp): records the floor or
+    // the session's parallelism, whichever is larger
+    val expected = math.max(8, spark.sparkContext.defaultParallelism)
+    val fresh = storeDir("_GEOMETRY.tmp" -> "")
+    assert(graft.ext.FpStore.storeBuckets(spark, fresh) === expected)
+    assert(Files.readString(Paths.get(fresh, "_GEOMETRY")).trim === expected.toString)
+    assert(!Files.exists(Paths.get(fresh, "_GEOMETRY.tmp")))
+    // a pre-recorded geometry of 4 is what the tables are declared with AND
+    // how the data files are laid out: every data file carries one of
+    // exactly 4 bucket ids (one file per task × bucket; the _NNNNN suffix is
+    // the bucket id). ingestDelta folds into the store as it is (build
+    // would wipe the path first).
+    val store = storeDir("_GEOMETRY" -> "4")
+    graft.ext.FpStore.ingestDelta(spark, store, sf).collect()
+    val tbl = spark.sql(
+      s"DESCRIBE TABLE EXTENDED ${graft.ext.FpStore.fpTable(store, "image")}")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(tbl.get("Num Buckets").contains("4"), tbl.toString)
+    val bucketIds = new java.io.File(s"$store/fps/modality=image/batch=0")
+      .listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      .flatMap("_(\\d{5})\\.c000".r.findFirstMatchIn(_).map(_.group(1).toInt))
+      .toSet
+    assert(bucketIds === Set(0, 1, 2, 3), s"bucket ids: $bucketIds")
+    // an empty record fails with the file's path, not a bare
+    // NumberFormatException
+    val torn = storeDir("_GEOMETRY" -> "")
+    val e = intercept[IllegalStateException] {
+      graft.ext.FpStore.storeBuckets(spark, torn)
+    }
+    assert(e.getMessage.contains(s"$torn/_GEOMETRY"), e.getMessage)
   }
 
   test("supplier pipeline runs the reference's full stage list incl. nation/region") {
@@ -659,6 +664,23 @@ class PipelineSpec extends SparkSpec {
     val fb = engine.EngineConfig.load("stage", "/nonexistent")
     assert(fb === engine.EngineConfig.defaults && fb.retryDelaySeconds === 60.0)
     intercept[IllegalArgumentException] { engine.EngineConfig.load("qa") }
+    // the file comes from outside the program: a value out of range or not
+    // a number fails naming the key and the file, never reaching a stage
+    val cfgDir = Files.createTempDirectory("graft_cfg").toString
+    for ((json, key) <- Seq(
+        """{"retry_delay_seconds": -1}""" -> "retry_delay_seconds",
+        """{"stage_timeout_seconds": 0}""" -> "stage_timeout_seconds",
+        """{"max_retry_attempts": "five"}""" -> "max_retry_attempts",
+        """{"max_retry_attempts": 0}""" -> "max_retry_attempts",
+        """{"max_retry_attempts": 2.5}""" -> "max_retry_attempts")) {
+      Files.writeString(java.nio.file.Paths.get(cfgDir, "dev.json"), json)
+      val e = intercept[IllegalArgumentException] { engine.EngineConfig.load("dev", cfgDir) }
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"$cfgDir/dev.json"),
+        s"$json: ${e.getMessage}")
+    }
+    Files.writeString(java.nio.file.Paths.get(cfgDir, "dev.json"),
+      """{"max_retry_attempts": 1, "retry_delay_seconds": 0, "stage_timeout_seconds": 0.5}""")
+    assert(engine.EngineConfig.load("dev", cfgDir) === engine.EngineConfig(1, 0.0, 0.5))
   }
 
   test("batchId formats as batch_yyyyMMdd_HHmmss") {

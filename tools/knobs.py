@@ -10,8 +10,8 @@ Prints one JSON object:
                         (sets and gets)
   engine_config_fields  `EngineConfig` field -> number of reads: selections
                         on a value typed `: EngineConfig` (`cfg.field`) and
-                        bare uses in the class's own methods (`applyTo`);
-                        the loader copying defaults is not a read
+                        bare uses in the class body's own methods, if it
+                        has a body; the loader copying defaults is not a read
 and the three name counts plus their sum as `options`. Comment lines are
 skipped, so a name that is only documented is not counted.
 """
@@ -24,7 +24,7 @@ ENV_READ = re.compile(
     r'(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\s*\(\s*"([A-Za-z0-9_]+)"')
 CONF_KEY = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]+)"')
 CASE_CLASS = re.compile(
-    r'final case class EngineConfig\((.*?)\)\s*\{(.*?)^\}', re.S | re.M)
+    r'final case class EngineConfig\((.*?)\)(?:\s*\{(.*?)^\})?', re.S | re.M)
 FIELD = re.compile(r'^\s*(\w+)\s*:', re.M)
 TYPED = re.compile(r'(\w+)\s*:\s*(?:graft\.engine\.)?EngineConfig\b')
 
@@ -57,7 +57,7 @@ def main():
         m = CASE_CLASS.search("\n".join(lines))
         if m:
             fields = {name: 0 for name in FIELD.findall(m.group(1))}
-            body = m.group(2)
+            body = m.group(2) or ""
     receivers = {r for lines in sources.values() for line in lines
                  for r in TYPED.findall(line)}
     for name in fields:
