@@ -9,11 +9,12 @@ import java.io.File
   * configs/dev.json:1-12 and prod.json carry the retry policy).
   *
   * Only the stage retry/timeout policy is kept: it is the one setting the
-  * engine reads. The reference's catalog, schema, pipeline mode and log
-  * level name Unity Catalog objects and cluster settings; in this
-  * file-based lake the output directory is the namespace, so they have no
-  * reader here. Store geometry is no setting either: every persisted store
-  * fixes its bucket count at creation (see
+  * engine reads, and [[Pipeline.stage]] applies it to every stage that runs
+  * (a stage whose input failed is skipped, not retried). The reference's
+  * catalog, schema, pipeline mode and log level name Unity Catalog objects
+  * and cluster settings; in this file-based lake the output directory is
+  * the namespace, so they have no reader here. Store geometry is no setting
+  * either: every persisted store fixes its bucket count at creation (see
   * [[graft.ext.VectorIndex.geometryBuckets]]).
   */
 final case class EngineConfig(

@@ -54,8 +54,8 @@ object Quality {
     case other             => throw new IllegalArgumentException(s"unknown table: $other")
   }
 
-  /** Layer-prefixed paths the [[Pipeline]] writes under its warehouse dir. */
-  private val WarehousePath: Map[String, String] = Map(
+  /** The [[Pipeline]] stage that writes each table under its warehouse dir. */
+  val WarehouseStage: Map[String, String] = Map(
     "orders" -> "bronze_orders", "customer" -> "bronze_customer",
     "lineitem" -> "bronze_lineitem", "supplier" -> "bronze_supplier",
     "part" -> "bronze_part", "nation" -> "bronze_nation", "region" -> "bronze_region",
@@ -63,10 +63,11 @@ object Quality {
     "customer_orders" -> "silver_customer_orders",
     "supplier_parts" -> "silver_supplier_parts")
 
-  /** Read the pipeline's written outputs — plain parquet scans, so the DQ
-    * stage's plan contains no joins/windows re-deriving silver. */
-  def warehouseTables(spark: SparkSession, outDir: String): TableResolver =
-    name => spark.read.parquet(s"$outDir/${WarehousePath(name)}")
+  /** Read the pipeline's written outputs through `read` (stage name →
+    * its written table) — plain parquet scans, so the DQ stage's plan
+    * contains no joins/windows re-deriving silver. */
+  def warehouseTables(read: String => DataFrame): TableResolver =
+    name => read(WarehouseStage(name))
 
   /** Check statuses: a table must have rows; a null, orphan or violation
     * count must be zero. */
@@ -309,7 +310,7 @@ object Quality {
     * exactly what the family means. */
   def overWarehouse(spark: SparkSession, outDir: String,
                     names: Seq[String]): DataFrame =
-    allFamiliesOver(warehouseTables(spark, outDir), names)
+    allFamiliesOver(warehouseTables(t => spark.read.parquet(s"$outDir/$t")), names)
 
   /** Pipeline gate over ALL FIVE families ([[allFamiliesOver]]): throws if
     * any check is non-PASS — including referential-integrity orphans and

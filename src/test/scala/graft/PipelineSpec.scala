@@ -302,8 +302,8 @@ class PipelineSpec extends SparkSpec {
     assert(dq.where(org.apache.spark.sql.functions.col("status") =!= "PASS").count() === 0)
   }
 
-  test("pipelines run each layer as one wave: bronze stages overlap, no silver job " +
-      "starts before the last bronze ends, no gold or DQ job before the last silver ends") {
+  test("pipelines order stages by their reads alone: bronze stages overlap, and no " +
+      "stage's job starts before the last job of each stage it reads has ended") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     // (job group, start ms, end ms) of every job run in a job group
@@ -317,7 +317,7 @@ class PipelineSpec extends SparkSpec {
         Option(started.remove(e.jobId)).foreach { case (g, t0) => jobs.add((g, t0, e.time)) }
     }
     val sc = spark.sparkContext
-    val out = Files.createTempDirectory("graft_pipe_waves").toString
+    val out = Files.createTempDirectory("graft_pipe_order").toString
     def traced(run: => Seq[Pipeline.StageResult]): Seq[(String, Long, Long)] = {
       sc.addSparkListener(listener)
       try {
@@ -328,23 +328,41 @@ class PipelineSpec extends SparkSpec {
       jobs.clear()
       js
     }
+    // the stage tables each non-bronze stage reads
+    val orderDetails = "silver_order_details" ->
+      Seq("bronze_orders", "bronze_lineitem", "bronze_part")
+    val salesReads = Map(orderDetails,
+      "silver_customer_orders" ->
+        Seq("bronze_customer", "bronze_nation", "bronze_region", "bronze_orders"),
+      "gold_revenue_by_region" -> Seq("silver_order_details", "silver_customer_orders"),
+      "gold_customer_lifetime_value" -> Seq("silver_order_details", "silver_customer_orders"),
+      "gold_monthly_sales_trends" -> Seq("silver_order_details"),
+      "quality_checks" -> Seq("bronze_orders", "bronze_customer", "bronze_lineitem",
+        "bronze_part", "silver_order_details", "silver_customer_orders"))
+    val supplierReads = Map(orderDetails,
+      "silver_supplier_parts" -> Seq("bronze_lineitem", "bronze_supplier", "bronze_nation",
+        "bronze_region", "bronze_part"),
+      "gold_supplier_performance" -> Seq("silver_supplier_parts", "silver_order_details"),
+      "quality_checks" -> Seq("bronze_orders", "bronze_supplier", "bronze_part",
+        "bronze_lineitem", "bronze_nation", "bronze_region", "silver_order_details",
+        "silver_supplier_parts"))
     val runs = Seq(
-      "sales" -> traced(Pipeline.runSalesAnalytics(spark, sf, s"$out/sales")),
-      "supplier" -> traced(Pipeline.runSupplierAnalytics(spark, sf, s"$out/supplier")))
-    for ((scope, js) <- runs) {
-      def of(prefixes: String*) = js.filter(j => prefixes.exists(j._1.startsWith))
-      val (bronze, silver, top) =
-        (of("bronze_", "stats_"), of("silver_"), of("gold_", "quality_"))
-      assert(bronze.nonEmpty && silver.nonEmpty && top.nonEmpty, s"$scope: $js")
+      ("sales", traced(Pipeline.runSalesAnalytics(spark, sf, s"$out/sales")), salesReads),
+      ("supplier", traced(Pipeline.runSupplierAnalytics(spark, sf, s"$out/supplier")),
+        supplierReads))
+    for ((scope, js, reads) <- runs) {
+      def of(stage: String) = js.filter(_._1 == stage)
+      val bronze = js.filter(_._1.startsWith("bronze_"))
       val overlapping = for {
-        a <- of("bronze_"); b <- of("bronze_")
+        a <- bronze; b <- bronze
         if a._1 < b._1 && a._2 < b._3 && b._2 < a._3
       } yield (a._1, b._1)
-      assert(overlapping.nonEmpty, s"$scope: no two bronze stages ran at once: ${of("bronze_")}")
-      assert(silver.map(_._2).min >= bronze.map(_._3).max,
-        s"$scope: a silver job started before wave 1 ended: $js")
-      assert(top.map(_._2).min >= silver.map(_._3).max,
-        s"$scope: a gold or DQ job started before wave 2 ended: $js")
+      assert(overlapping.nonEmpty, s"$scope: no two bronze stages ran at once: $bronze")
+      for ((stage, inputs) <- reads; input <- inputs) {
+        assert(of(stage).nonEmpty && of(input).nonEmpty, s"$scope: $stage or $input untraced: $js")
+        assert(of(stage).map(_._2).min >= of(input).map(_._3).max,
+          s"$scope: a $stage job started before $input ended: $js")
+      }
     }
   }
 
@@ -359,8 +377,8 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("a failed critical stage ends its pipeline after its wave: without " +
-      "lineitem, sales writes no silver and supplier no gold") {
+  test("a failed input skips every stage that reads it, directly or through another " +
+      "stage: without lineitem, no stage downstream of bronze_lineitem writes") {
     val noLineitem = Files.createTempDirectory("graft_no_lineitem")
     new java.io.File(sf).listFiles().filter(_.getName != "lineitem.parquet")
       .foreach(f => Files.copy(f.toPath, noLineitem.resolve(f.getName)))
@@ -368,24 +386,67 @@ class PipelineSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_pipe_gate").toString
     def written(scope: String): Seq[String] =
       Option(new java.io.File(s"$out/$scope").list()).toSeq.flatten.sorted
-    // sales: bronze_lineitem is critical, so the run ends after wave 1; the
-    // other stages of that wave still ran
+    // sales: every reader of lineitem, direct or through silver_order_details,
+    // is skipped; stages that do not depend on lineitem still ran
     val sales = intercept[RuntimeException] {
       Pipeline.runSalesAnalytics(spark, noLineitem.toString, s"$out/sales", cfg)
     }
-    assert(sales.getMessage.contains("critical stage 'bronze_lineitem' failed"),
+    assert(sales.getMessage.startsWith("sales pipeline failed: bronze_lineitem: "),
       sales.getMessage)
-    assert(!written("sales").exists(_.startsWith("silver_")), written("sales"))
+    assert(written("sales").intersect(Seq("silver_order_details", "gold_revenue_by_region",
+      "gold_customer_lifetime_value", "gold_monthly_sales_trends", "quality_checks")).isEmpty,
+      written("sales"))
     assert(written("sales").contains("bronze_orders"), written("sales"))
-    // supplier: the critical silver_supplier_parts reads bronze_lineitem, so
-    // bronze_lineitem is critical too and the run ends after wave 1
+    assert(written("sales").contains("silver_customer_orders"), written("sales"))
+    // supplier: both silver stages read lineitem, so nothing past bronze runs
     val supplier = intercept[RuntimeException] {
       Pipeline.runSupplierAnalytics(spark, noLineitem.toString, s"$out/supplier", cfg)
     }
-    assert(supplier.getMessage.contains("critical stage 'bronze_lineitem' failed"),
+    assert(supplier.getMessage.startsWith("supplier pipeline failed: bronze_lineitem: "),
       supplier.getMessage)
     assert(written("supplier").contains("bronze_supplier"), written("supplier"))
-    assert(!written("supplier").exists(_.startsWith("silver_")), written("supplier"))
+    assert(written("supplier").intersect(Seq("silver_supplier_parts", "silver_order_details",
+      "gold_supplier_performance", "quality_checks")).isEmpty, written("supplier"))
+  }
+
+  test("a failed input costs its readers no retry: without orders, the supplier pipeline " +
+      "names bronze_orders first and skips its readers without a delay") {
+    val noOrders = Files.createTempDirectory("graft_no_orders")
+    new java.io.File(sf).listFiles().filter(_.getName != "orders.parquet")
+      .foreach(f => Files.copy(f.toPath, noOrders.resolve(f.getName)))
+    val cfg = engine.EngineConfig.defaults.copy(maxRetryAttempts = 2, retryDelaySeconds = 30)
+    val out = Files.createTempDirectory("graft_pipe_skip").toString
+    val t0 = System.nanoTime()
+    val e = intercept[RuntimeException] {
+      Pipeline.runSupplierAnalytics(spark, noOrders.toString, out, cfg)
+    }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    val msg = e.getMessage
+    assert(msg.startsWith("supplier pipeline failed: bronze_orders: "), msg)
+    val skipped = msg.split("; skipped for a failed input: ").drop(1).flatMap(_.split(", "))
+    assert(skipped.toSeq ===
+      Seq("silver_order_details", "gold_supplier_performance", "quality_checks"), msg)
+    val written = Option(new java.io.File(out).list()).toSeq.flatten
+    assert(written.contains("bronze_supplier") && written.contains("silver_supplier_parts"),
+      written.sorted)
+    // one 30 s retry delay (bronze_orders' own, beside stats_profile's), not
+    // one more per reader
+    assert(seconds < 60, s"supplier run took $seconds s")
+  }
+
+  test("a stage frame that resolves a table missing from its reads fails, naming " +
+      "the stage and the table") {
+    val out = Files.createTempDirectory("graft_pipe_undeclared").toString
+    val cfg = engine.EngineConfig.defaults.copy(maxRetryAttempts = 1)
+    val e = intercept[RuntimeException] {
+      Pipeline.runStages(spark, cfg, out, "test", Seq(
+        Pipeline.Step("bronze_region", Nil, _ => engine.Bronze.region(spark, sf)),
+        Pipeline.Step("bronze_nation", Nil, _ => engine.Bronze.nation(spark, sf)),
+        // bronze_nation is written, but this stage does not declare it
+        Pipeline.Step("region_names", Seq("bronze_region"), t => t("bronze_nation"))))
+    }
+    assert(e.getMessage.contains("stage 'region_names' reads undeclared table 'bronze_nation'"),
+      e.getMessage)
   }
 
   test("incremental mode == from-scratch aggregates bit-for-bit; replay no-ops; " +
@@ -632,7 +693,7 @@ class PipelineSpec extends SparkSpec {
     val cfg = engine.EngineConfig.defaults
       .copy(maxRetryAttempts = 3, retryDelaySeconds = 0.01)
     var calls = 0
-    val r = Pipeline.stage(spark, cfg, "flaky", critical = false, out) {
+    val r = Pipeline.stage(spark, cfg, "flaky", out) {
       calls += 1
       if (calls < 3) sys.error(s"transient failure #$calls")
       engine.Bronze.region(spark, sf)
@@ -640,14 +701,14 @@ class PipelineSpec extends SparkSpec {
     assert(r.status === "PASS" && r.attempts === 3 && r.rows === 5)
   }
 
-  test("stage times out, cancels its job group, and records FAIL when non-critical") {
+  test("stage times out, cancels its job group, and records FAIL") {
     val out = Files.createTempDirectory("graft_timeout").toString
     val cfg = engine.EngineConfig.defaults
       .copy(maxRetryAttempts = 1, retryDelaySeconds = 0.01, stageTimeoutSeconds = 1.5)
     val slow = org.apache.spark.sql.functions.udf { n: Long =>
       Thread.sleep(10000); n
     }
-    val r = Pipeline.stage(spark, cfg, "too_slow", critical = false, out) {
+    val r = Pipeline.stage(spark, cfg, "too_slow", out) {
       spark.range(4).select(slow(org.apache.spark.sql.functions.col("id")).as("id"))
     }
     assert(r.status === "FAIL" && r.error.exists(_.contains("timed out")), r.toString)
