@@ -41,6 +41,14 @@ object Incremental {
     state.select(col("order_year"), col("order_month"), col("n_orders"),
       Num.r2(col("_rev").cast("double")).as("total_revenue"))
 
+  /** Fold one orders batch into the monthly-revenue state at `path`
+    * ([[graft.sources.Versioned.foldBatch]]) — the fold the batch mode
+    * ([[Pipeline.runSalesIncrement]]) runs per batch and the stream
+    * ([[graft.streaming.Streams.maintainMonthlyRevenue]]) per micro-batch.
+    * Returns the committed row count. */
+  def foldMonthlyRevenue(orders: DataFrame, path: String, batchId: Long): Long =
+    graft.sources.Versioned.foldBatch(path, batchId, monthlyRevenueState(orders), merge)
+
   /** Partial state of the per-customer order profile over an orders slice —
     * same algebra as [[monthlyRevenueState]] at customer grain (the schema
     * [[Cdf.customerOrderChanges]] snapshots use). */

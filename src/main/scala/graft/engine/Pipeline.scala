@@ -8,8 +8,8 @@ import scala.concurrent.duration.{Duration, DurationDouble}
 import scala.concurrent.{Await, Future, blocking}
 import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.Sinks
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import graft.sources.{Sinks, Versioned}
 
 /** Pipeline orchestrator — the reference's `run_sales_analytics` /
   * `run_supplier_analytics` entry points (reference:
@@ -41,7 +41,9 @@ import graft.sources.Sinks
   *
   * Orchestration policy comes from [[EngineConfig]]: each stage is retried
   * `maxRetryAttempts` times with `retryDelaySeconds` between attempts
-  * (reference: configs/prod.json:10-11) and bounded by `stageTimeoutSeconds`
+  * (reference: configs/prod.json:10-11) — except on an error no retry can
+  * mend (a missing input, an unresolved column, an undeclared read), which
+  * fails the stage at once — and bounded by `stageTimeoutSeconds`
   * (the reference's `dbutils.notebook.run(path, 3600, …)` bound,
   * run_sales_analytics.py:45) — on timeout the stage's Spark job group is
   * cancelled so no orphaned jobs keep burning the cluster.
@@ -107,32 +109,38 @@ object Pipeline {
     }
   }
 
+  /** A stage frame's read of a stage table it did not declare. */
+  private final class UndeclaredRead(msg: String) extends IllegalArgumentException(msg)
+
+  /** An error no retry can mend: an analysis error (a missing input path, an
+    * unresolved column) or an undeclared read. */
+  private def permanent(e: Exception): Boolean = e match {
+    case _: AnalysisException | _: UndeclaredRead => true
+    case _ => false
+  }
+
   /** One pipeline stage: evaluate `df` (re-evaluated per attempt), write it,
     * count rows from write metrics. Retries with delay, bounded by the stage
-    * timeout; after the last failed attempt it records FAIL with the error. */
+    * timeout; after the last failed attempt — or the first, when the error
+    * is [[permanent]] — it records FAIL with the error. */
   def stage(spark: SparkSession, cfg: EngineConfig, name: String,
             out: String, partitionBy: Seq[String] = Nil)(df: => DataFrame): StageResult = {
     val t0 = System.nanoTime()
     val maxAttempts = math.max(1, cfg.maxRetryAttempts)
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt < maxAttempts) {
-      attempt += 1
+    def attempt(n: Int): StageResult =
       try {
         val rows = withTimeout(spark, name, cfg.stageTimeoutSeconds) {
           writeCounted(df, name, s"$out/$name", partitionBy)
         }
-        return StageResult(name, "PASS", (System.nanoTime() - t0) / 1e9, rows,
-          None, attempt)
+        StageResult(name, "PASS", (System.nanoTime() - t0) / 1e9, rows, None, n)
       } catch {
+        case e: Exception if n < maxAttempts && !permanent(e) =>
+          Thread.sleep((cfg.retryDelaySeconds * 1000).toLong)
+          attempt(n + 1)
         case e: Exception =>
-          lastErr = e
-          if (attempt < maxAttempts)
-            Thread.sleep((cfg.retryDelaySeconds * 1000).toLong)
+          StageResult(name, "FAIL", (System.nanoTime() - t0) / 1e9, -1, Some(e.getMessage), n)
       }
-    }
-    StageResult(name, "FAIL", (System.nanoTime() - t0) / 1e9, -1,
-      Some(lastErr.getMessage), attempt)
+    attempt(1)
   }
 
   /** A stage as [[runStages]] takes it: the stage tables it `reads` and its
@@ -158,7 +166,7 @@ object Pipeline {
       val inputs = s.reads.map(ended)
       val read: String => DataFrame = t =>
         if (s.reads.contains(t)) spark.read.parquet(s"$outDir/$t")
-        else throw new IllegalArgumentException(s"stage '${s.name}' reads undeclared table '$t'")
+        else throw new UndeclaredRead(s"stage '${s.name}' reads undeclared table '$t'")
       ended(s.name) = Future.sequence(inputs).map(_.find(_.status == "FAIL") match {
         case Some(in) =>
           StageResult(s.name, "FAIL", 0.0, -1, Some(s"input '${in.stage}' failed"), attempts = 0)
@@ -239,6 +247,27 @@ object Pipeline {
     StageResult(name, "PASS", (System.nanoTime() - t0) / 1e9, n)
   }
 
+  /** Fold `delta` into the state `outDir/<state>` ([[Versioned.foldBatch]])
+    * as the PASS stage `stage`, publishing the change feed of the fold on
+    * the way: [[Cdf.diff]] on `keys` of the state `finalize`d before and
+    * after the batch, under `outDir/<feed>/batch=<id>` (overwrite), as the
+    * PASS stage `feed` ahead of it. Each stage counts its own rows and
+    * seconds; a batch the state already holds records both with 0 rows. */
+  private def foldWithFeed(outDir: String, batchId: Long, stage: String, state: String,
+                           delta: DataFrame, merge: Seq[DataFrame] => DataFrame,
+                           feed: String, keys: Seq[String],
+                           finalize: DataFrame => DataFrame): Seq[StageResult] = {
+    val part = s"$outDir/$feed/batch=$batchId"
+    var published = StageResult(feed, "PASS", 0.0, 0L)
+    val folded = timed(stage)(Versioned.foldBatch(s"$outDir/$state", batchId, delta, merge,
+      (head, merged) => published = timed(feed) {
+        Cdf.diff(finalize(head.getOrElse(delta.limit(0))), finalize(merged), keys)
+          .write.mode("overwrite").parquet(part)
+        delta.sparkSession.read.parquet(part).count()
+      }))
+    Seq(published, folded.copy(seconds = folded.seconds - published.seconds))
+  }
+
   /** INCREMENTAL sales mode — the "incremental lakehouse" of the
     * reference's name made an actual pipeline mode (its own runs only ever
     * snapshot-overwrite; reference README's incremental claim vs
@@ -251,63 +280,23 @@ object Pipeline {
     * for downstream consumers — only churn flows.
     *
     * Cost is O(delta) + O(state): order history is never re-read, states
-    * are group-grain. Replay-safe at-least-once: every commit is tagged
-    * with the batch id ([[graft.sources.Versioned.write]]'s pointer swap is
-    * the atomic commit point), so a replayed batch sees its own tag and
-    * no-ops; the feed partition is written BEFORE the commit with overwrite
-    * semantics, so a crash between them replays into identical bytes.
-    * PipelineSpec asserts bit-identity with the from-scratch aggregates
-    * after every batch, no-op replay, and that applying the published feeds
-    * in order reconstructs the final profile exactly. */
+    * are group-grain. Replay-safe at-least-once by [[Versioned.foldBatch]]'s
+    * high-water rule: batch ids are monotone and every commit records its
+    * batch id, so a batch at or below the committed one — the last batch
+    * replayed after a crash or any older one — folds nothing and leaves
+    * both the states and its feed partition as they are. The feed partition
+    * is written BEFORE the commit with overwrite semantics, so a crash
+    * between them replays into identical bytes. PipelineSpec asserts
+    * bit-identity with the from-scratch aggregates after every batch,
+    * byte-identical replays, and that applying the published feeds in order
+    * reconstructs the final profile exactly. */
   def runSalesIncrement(spark: SparkSession, ordersDelta: DataFrame,
-                        outDir: String, batchId: Long): Seq[StageResult] = {
-    import graft.sources.Versioned
-    val tag = s"batch=$batchId"
-    val monthlyPath = s"$outDir/state_monthly_revenue"
-    val monthly = timed("incr_monthly_revenue") {
-      if (Versioned.latestTag(spark, monthlyPath).contains(tag)) 0L
-      else {
-        val delta = Incremental.monthlyRevenueState(ordersDelta)
-        val merged = (Versioned.latestVersion(spark, monthlyPath) match {
-          case Some(_) =>
-            Incremental.merge(Seq(Versioned.read(spark, monthlyPath), delta))
-          case None => delta
-        }).persist()
-        val n = merged.count()
-        Versioned.write(merged, monthlyPath, Some(tag))
-        merged.unpersist()
-        n
-      }
-    }
-    val profilePath = s"$outDir/state_customer_profile"
-    val feedPath = s"$outDir/cdf_customer_profile"
-    val profile =
-      if (Versioned.latestTag(spark, profilePath).contains(tag))
-        Seq(timed("cdf_customer_profile")(0L), timed("incr_customer_profile")(0L))
-      else {
-        val delta = Incremental.customerProfileState(ordersDelta)
-        val before = Versioned.latestVersion(spark, profilePath)
-          .map(_ => Versioned.read(spark, profilePath))
-        val merged = (before match {
-          case Some(b) => Incremental.mergeCustomerProfiles(Seq(b, delta))
-          case None => delta
-        }).persist()
-        Seq(timed("cdf_customer_profile") {
-          val beforeFin = Incremental.finalizeCustomerProfile(
-            before.getOrElse(delta.limit(0)))
-          Cdf.diff(beforeFin, Incremental.finalizeCustomerProfile(merged),
-              Seq("customer_key"))
-            .write.mode("overwrite").parquet(s"$feedPath/batch=$batchId")
-          spark.read.parquet(s"$feedPath/batch=$batchId").count()
-        }, timed("incr_customer_profile") {
-          val n = merged.count()
-          Versioned.write(merged, profilePath, Some(tag))
-          merged.unpersist()
-          n
-        })
-      }
-    monthly +: profile
-  }
+                        outDir: String, batchId: Long): Seq[StageResult] =
+    timed("incr_monthly_revenue")(Incremental.foldMonthlyRevenue(
+      ordersDelta, s"$outDir/state_monthly_revenue", batchId)) +:
+      foldWithFeed(outDir, batchId, "incr_customer_profile", "state_customer_profile",
+        Incremental.customerProfileState(ordersDelta), Incremental.mergeCustomerProfiles,
+        "cdf_customer_profile", Seq("customer_key"), Incremental.finalizeCustomerProfile)
 
   /** INCREMENTAL supplier mode — [[runSalesIncrement]]'s delta-fold
     * mirrored onto the supplier pipeline. What is and isn't
@@ -325,79 +314,36 @@ object Pipeline {
     *    lineitem history, so the per-batch cost of the non-foldable
     *    remainder is O(state), not O(history).
     *
-    * Same replay discipline as the sales mode: batch-tagged versioned
-    * commits no-op on replay; the `cdf_supplier_parts` feed partition
-    * (row-level diff of the FINALIZED silver before/after, key =
-    * (supplier_key, part_key)) is overwrite-written before the commit, so
-    * a crash between them replays into identical bytes. Only churn flows —
-    * including rank churn the window finalize induces, which is exactly
-    * what a downstream consumer needs to see. */
+    * Same commit rule as the sales mode: a batch at or below the committed
+    * one folds nothing; the `cdf_supplier_parts` feed partition (row-level
+    * diff of the FINALIZED silver before/after, key = (supplier_key,
+    * part_key)) is overwrite-written before the commit, so a crash between
+    * them replays into identical bytes. Only churn flows — including rank
+    * churn the window finalize induces, which is exactly what a downstream
+    * consumer needs to see. */
   def runSupplierIncrement(spark: SparkSession, lineitemDelta: DataFrame,
                            dir: String, outDir: String,
-                           batchId: Long): Seq[StageResult] = {
-    import graft.sources.Versioned
-    val tag = s"batch=$batchId"
-    val statePath = s"$outDir/state_supplier_bridge"
-    val feedPath = s"$outDir/cdf_supplier_parts"
-    if (Versioned.latestTag(spark, statePath).contains(tag))
-      Seq(timed("cdf_supplier_parts")(0L), timed("incr_supplier_bridge")(0L))
-    else {
-      val delta = Incremental.supplierBridgeState(lineitemDelta)
-      val before = Versioned.latestVersion(spark, statePath)
-        .map(_ => Versioned.read(spark, statePath))
-      val merged = (before match {
-        case Some(b) => Incremental.mergeSupplierBridge(Seq(b, delta))
-        case None => delta
-      }).persist()
-      Seq(timed("cdf_supplier_parts") {
-        def silverOf(state: DataFrame): DataFrame =
-          Silver.supplierPartsFromBridge(spark, dir,
-            Incremental.finalizeSupplierBridge(state))
-        Cdf.diff(silverOf(before.getOrElse(delta.limit(0))), silverOf(merged),
-            Seq("supplier_key", "part_key"))
-          .write.mode("overwrite").parquet(s"$feedPath/batch=$batchId")
-        spark.read.parquet(s"$feedPath/batch=$batchId").count()
-      }, timed("incr_supplier_bridge") {
-        val n = merged.count()
-        Versioned.write(merged, statePath, Some(tag))
-        merged.unpersist()
-        n
-      })
-    }
-  }
+                           batchId: Long): Seq[StageResult] =
+    foldWithFeed(outDir, batchId, "incr_supplier_bridge", "state_supplier_bridge",
+      Incremental.supplierBridgeState(lineitemDelta), Incremental.mergeSupplierBridge,
+      "cdf_supplier_parts", Seq("supplier_key", "part_key"),
+      state => Silver.supplierPartsFromBridge(spark, dir, Incremental.finalizeSupplierBridge(state)))
 
   /** INCREMENTAL statistics maintenance — the stats catalog
-    * ([[graft.ext.Sketch]]) kept fresh by the same delta-fold discipline as
-    * the revenue and supplier-bridge states: per batch, fold each profiled
-    * column's mergeable state (counts, min/max, the KMV hash set itself)
-    * into the versioned store. O(delta) + O(state) per batch; the state is
-    * profiled-columns-grain (tiny). The drift gates
-    * ([[graft.ext.Sketch.statsDrift]]) then compare versions that track the
-    * data as it lands instead of a scheduled ANALYZE snapshot. Replay
-    * discipline identical to the other increment modes. */
+    * ([[graft.ext.Sketch]]) kept fresh by the same delta-fold and commit
+    * rule as the revenue and supplier-bridge states: per batch, fold each
+    * profiled column's mergeable state (counts, min/max, the KMV hash set
+    * itself) into the versioned store ([[graft.ext.Sketch.foldStats]]).
+    * O(delta) + O(state) per batch; the state is profiled-columns-grain
+    * (tiny). The drift gates ([[graft.ext.Sketch.statsDrift]]) then compare
+    * versions that track the data as it lands instead of a scheduled
+    * ANALYZE snapshot. A batch at or below the committed one folds
+    * nothing. */
   def runStatsIncrement(spark: SparkSession, deltas: String => DataFrame,
                         outDir: String, batchId: Long): Seq[StageResult] = {
     import graft.ext.Sketch
-    import graft.sources.Versioned
-    val tag = s"batch=$batchId"
-    val path = s"$outDir/state_table_stats"
-    Seq(timed("incr_table_stats") {
-      if (Versioned.latestTag(spark, path).contains(tag)) 0L
-      else {
-        // one fused pass per table; the zero states keep every profiled
-        // column present when a table's delta is empty
-        val delta = Sketch.ProfiledColumns.groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (t, cols) => Sketch.statsStates(deltas(t), t, cols.map(_._2)) } :+
-          Sketch.zeroStatesFor(spark, Sketch.ProfiledColumns)
-        val merged = Sketch.mergeStatsStates(
-          Versioned.latestVersion(spark, path).map(_ => Versioned.read(spark, path)).toSeq ++
-            delta).persist()
-        val rows = merged.count()
-        Versioned.write(merged, path, Some(tag))
-        merged.unpersist()
-        rows
-      }
-    })
+    Seq(timed("incr_table_stats")(Sketch.foldStats(spark, deltas, Sketch.ProfiledColumns,
+      s"$outDir/state_table_stats", batchId)))
   }
 
   /** The statistics profile over the PROFILED columns of the given source

@@ -300,18 +300,6 @@ object Quality {
   private case class Check(family: String, name: String, agg: Column,
                            metric: Column => Column, status: Column => Column)
 
-  /** The DQ audit a DEPLOYED pipeline runs: EVERY family, evaluated over the
-    * tables the pipeline actually wrote under `outDir` (restricted to
-    * `names` — a pipeline only audits the tables it materializes). Each
-    * written table is read once and audited by one fused aggregate
-    * ([[allFamiliesOver]]), so the plan holds one parquet scan per audited
-    * table plus one per RI key set — no silver recompute; the only joins are
-    * the RI orphan probes against distinct key sets (dims broadcast),
-    * exactly what the family means. */
-  def overWarehouse(spark: SparkSession, outDir: String,
-                    names: Seq[String]): DataFrame =
-    allFamiliesOver(warehouseTables(t => spark.read.parquet(s"$outDir/$t")), names)
-
   /** Pipeline gate over ALL FIVE families ([[allFamiliesOver]]): throws if
     * any check is non-PASS — including referential-integrity orphans and
     * freshness STALE, which the pre-r7 gate could not trip on (it unioned

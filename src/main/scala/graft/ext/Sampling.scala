@@ -162,18 +162,7 @@ object Sampling {
     val vecs = Similarity.withNorm(Sources.embeddings(spark, dir))
     // session-shared √n quantizer (r15) — same key/frame/chain as
     // dedup_semantic_kmeans
-    clusterBalancedSampleWith(vecs,
-      Similarity.kmeansCentroidsLocalShared(vecs, s"$dir#sqrt-base"))
-  }
-
-  /** PRODUCTION ENTRY — [[clusterBalancedSample]] over ANY normalized
-    * (vec_id, v, norm) frame ([[Similarity.withNorm]] produces one from raw
-    * embeddings). */
-  def clusterBalancedSampleOf(vecs: DataFrame): DataFrame =
-    clusterBalancedSampleWith(vecs, Similarity.kmeansCentroidsLocal(vecs))
-
-  private def clusterBalancedSampleWith(vecs: DataFrame,
-      cents: Array[Similarity.Cent]): DataFrame = {
+    val cents = Similarity.kmeansCentroidsLocalShared(vecs, s"$dir#sqrt-base")
     val asg = vecs
       .withColumn("cluster",
         element_at(Similarity.nearestCells(cents, 1), 1).getField("cl"))

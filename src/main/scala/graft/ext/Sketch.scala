@@ -191,6 +191,22 @@ object Sketch {
         col("kmv"))
   }
 
+  /** Fold one batch of every table in `columns` (profiled (table, column)
+    * pairs; `deltas` gives each table's batch) into the stats state at
+    * `path` ([[graft.sources.Versioned.foldBatch]]) — the fold the batch
+    * mode ([[graft.engine.Pipeline.runStatsIncrement]]) runs per batch and
+    * the stream ([[graft.streaming.Streams.maintainStats]]) per
+    * micro-batch. One fused pass per table; the zero states keep every
+    * column present when a table's batch is empty. Returns the committed
+    * row count. */
+  def foldStats(spark: SparkSession, deltas: String => DataFrame,
+                columns: Seq[(String, String)], path: String, batchId: Long): Long = {
+    val delta = mergeStatsStates(columns.map(_._1).distinct.map { t =>
+      statsStates(deltas(t), t, columns.collect { case (`t`, c) => c })
+    } :+ zeroStatesFor(spark, columns))
+    graft.sources.Versioned.foldBatch(path, batchId, delta, mergeStatsStates)
+  }
+
   /** [[ProfiledColumns]] grouped per table, insertion-ordered. */
   private def profiledByTable: Seq[(String, Seq[String])] =
     ProfiledColumns.map(_._1).distinct

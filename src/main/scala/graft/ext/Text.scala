@@ -393,8 +393,7 @@ object Text {
     SessionOnce(store) {
       if (graft.sources.Versioned.latestVersion(spark, store).isEmpty)
         graft.sources.Versioned.write(
-          cmsCountersOf(cmsKeyCountsOf(Sources.documents(spark, dir))),
-          store, Some("batch=full"))
+          cmsCountersOf(cmsKeyCountsOf(Sources.documents(spark, dir))), store)
     }
     store
   }

@@ -16,6 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    [[latestVersion]] reads as the pointer
   *  - time travel = read a pinned `v=<n>`; rollback = move the pointer (data
   *    is untouched, roll-forward stays possible)
+  *  - a maintained state commits each delta batch through [[foldBatch]],
+  *    which tags the version with its batch id (`v=<n>/_TAG` = `batch=<id>`)
+  *    and treats the head's id as a high-water mark: a batch at or below it
+  *    folds nothing. That is the exactly-once rule of every state fold,
+  *    batch mode and stream alike (monotone batch ids + an idempotent
+  *    commit, as in Structured Streaming)
   *
   * At 100 TB the pointer would live in a transaction log / catalog with
   * conditional-put semantics; the layout and reader contract stay the same.
@@ -24,6 +30,7 @@ object Versioned {
 
   private val Pointer = "_LATEST"
   private val PointerTmp = s"$Pointer.tmp"
+  private val BatchTag = """batch=(-?\d+)""".r
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -69,32 +76,73 @@ object Versioned {
 
   /** Write `df` as the next version and move the pointer. Returns the new
     * version number. Versions allocate past ALL existing history, so a write
-    * after a rollback never clobbers the rolled-back-from versions.
-    *
-    * `tag` is commit metadata written INTO the version directory before the
-    * pointer swap (the swap is the atomic commit point) — e.g. a streaming
-    * micro-batch id, so a replayed foreachBatch can see via [[latestTag]]
-    * whether its batch already committed. Delta's commitInfo, minimally. */
-  def write(df: DataFrame, path: String, tag: Option[String] = None): Int = {
+    * after a rollback never clobbers the rolled-back-from versions. */
+  def write(df: DataFrame, path: String): Int = commit(df, path, None)
+
+  /** [[write]], recording `batch` as the version's `_TAG` (`batch=<n>`)
+    * INTO the version directory before the pointer swap, so the swap — the
+    * atomic commit point — commits the data and its batch id together.
+    * Delta's commitInfo, minimally. */
+  private def commit(df: DataFrame, path: String, batch: Option[Long]): Int = {
     val spark = df.sparkSession
     val next = maxExisting(spark, path) + 1
     df.write.mode("errorifexists").parquet(s"$path/v=$next")
     val f = fs(spark, path)
-    tag.foreach { t =>
+    batch.foreach { b =>
       val out = f.create(new Path(s"$path/v=$next", "_TAG"), true)
-      try out.write(t.getBytes("UTF-8")) finally out.close()
+      try out.write(s"batch=$b".getBytes("UTF-8")) finally out.close()
     }
     swapPointer(f, path, next)
     next
   }
 
-  /** The commit tag of the CURRENT (pointer) version, if any. */
-  def latestTag(spark: SparkSession, path: String): Option[String] =
+  /** The batch id the CURRENT (pointer) version committed. A version with
+    * no tag, or a tag that is not `batch=<n>`, committed no batch. */
+  private def committedBatch(spark: SparkSession, path: String): Option[Long] =
     latestVersion(spark, path).flatMap { v =>
       val f = fs(spark, path)
       val p = new Path(s"$path/v=$v", "_TAG")
-      if (!f.exists(p)) None else Some(readString(f, p))
+      if (!f.exists(p)) None
+      else readString(f, p).trim match {
+        case BatchTag(n) => n.toLongOption
+        case _ => None
+      }
     }
+
+  /** Fold batch `batchId` into the maintained state at `path` — the ONE
+    * commit rule of every state fold, batch mode and stream alike. Batch
+    * ids are monotone (a stream's micro-batch ids, a batch mode's run
+    * numbers), so the committed id is a high-water mark: a batch at or
+    * below it is already part of the state and folds nothing — a crash
+    * replay of the last batch and a replay of any older one alike (the
+    * merges are additive; a re-fold would double-count). Otherwise the
+    * `delta` state merges onto the head (`merge(Seq(head, delta))`; the
+    * delta alone when there is no head), `publish(head, merged)` runs, and
+    * the merged state commits as the next version, tagged with the batch.
+    * Returns the committed row count (0 for a skipped batch).
+    *
+    * `publish` runs before the commit and only when the batch folds — where
+    * a change feed derived from the fold is written, with overwrite
+    * semantics: a crash between the publish and the commit replays the
+    * batch into identical feed bytes, and a skipped batch never rewrites
+    * its feed. A crash before the pointer swap leaves the old head, so the
+    * replay refolds from it. */
+  def foldBatch(path: String, batchId: Long, delta: DataFrame,
+                merge: Seq[DataFrame] => DataFrame,
+                publish: (Option[DataFrame], DataFrame) => Unit = (_, _) => ()): Long = {
+    val spark = delta.sparkSession
+    if (committedBatch(spark, path).exists(batchId <= _)) 0L
+    else {
+      val head = latestVersion(spark, path).map(_ => read(spark, path))
+      val merged = head.fold(delta)(h => merge(Seq(h, delta))).persist()
+      try {
+        publish(head, merged)
+        val rows = merged.count()
+        commit(merged, path, Some(batchId))
+        rows
+      } finally merged.unpersist()
+    }
+  }
 
   /** Read the latest version, or time-travel to a pinned one. */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {

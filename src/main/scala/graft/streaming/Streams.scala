@@ -852,14 +852,18 @@ object Streams {
     * incremental alternative to re-aggregating full history every run.
     * `finalize(read(path))` at any instant is the exact from-scratch
     * aggregate of everything ingested so far (LakehouseSpec / the
-    * incr_monthly_revenue oracle prove the algebra). */
+    * incr_monthly_revenue oracle prove the algebra). Each micro-batch runs
+    * the batch mode's fold ([[graft.engine.Incremental.foldMonthlyRevenue]])
+    * under its commit rule: micro-batch ids are monotone, so a replayed
+    * batch is at or below the committed id and folds nothing. */
   def maintainMonthlyRevenue(orders: DataFrame, path: String,
                              checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     orders.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldMonthlyRevenueBatch(batch, path, batchId)
+        graft.engine.Incremental.foldMonthlyRevenue(batch, path, batchId)
+        ()
       }
       .start()
 
@@ -869,17 +873,20 @@ object Streams {
     * [[graft.engine.Pipeline.runStatsIncrement]] maintains in batch mode.
     * The stats catalog then tracks a live stream: the drift gates
     * ([[graft.ext.Sketch.statsDrift]]) read a profile as fresh as the last
-    * micro-batch, not the last scheduled ANALYZE. Exactly-once by
-    * the same batch-tagged version commit as the revenue fold (merge is
-    * additive in n_rows — a double fold would inflate counts). Per-batch
-    * cost O(batch) + O(state); state is profiled-columns-grain. */
+    * micro-batch, not the last scheduled ANALYZE. Each micro-batch runs the
+    * batch mode's fold ([[graft.ext.Sketch.foldStats]]), exactly-once by
+    * its commit rule (merge is additive in n_rows — a double fold would
+    * inflate counts). Per-batch cost O(batch) + O(state); state is
+    * profiled-columns-grain. */
   def maintainStats(stream: DataFrame, table: String, cols: Seq[String],
                     path: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldStatsBatch(batch, table, cols, path, batchId)
+        graft.ext.Sketch.foldStats(batch.sparkSession, _ => batch, cols.map(table -> _),
+          path, batchId)
+        ()
       }
       .start()
 
@@ -892,8 +899,9 @@ object Streams {
     * [[graft.ext.Similarity.embeddingDriftFromStates]] over (reference
     * state, live state) — or any two versions of the live state — without
     * rescanning either corpus: drift detection at O(batch) per micro-batch
-    * + O(√n) state. Exactly-once by the batch-tagged version commit (the
-    * fold is additive — a double fold would inflate occupancy). */
+    * + O(√n) state. Exactly-once by [[graft.sources.Versioned.foldBatch]]'s
+    * commit rule (the fold is additive — a double fold would inflate
+    * occupancy). */
   def maintainCellOccupancy(stream: DataFrame,
                             cents: Array[graft.ext.Similarity.Cent],
                             path: String, checkpoint: String)
@@ -903,6 +911,7 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldCellOccupancyBatch(batch, cents, path, batchId)
+        ()
       }
       .start()
 
@@ -913,9 +922,9 @@ object Streams {
     * sketch(A∪B) = sketch(A)+sketch(B)), so n-gram heavy-hitter estimates
     * stay queryable ([[graft.ext.Text.cmsEstimateOver]]) at O(batch) work
     * per micro-batch + O(d·w) constant state — never a corpus rescan, and
-    * the corpus itself need not be retained. Exactly-once by the
-    * batch-tagged version commit (same discipline as the occupancy fold:
-    * a replayed batch must not double-fold an additive state). */
+    * the corpus itself need not be retained. Exactly-once by
+    * [[graft.sources.Versioned.foldBatch]]'s commit rule (a replayed batch
+    * must not double-fold an additive state). */
   def maintainCmsGrid(docs: DataFrame, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
@@ -923,8 +932,26 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldCmsBatch(batch, path, batchId)
+        ()
       }
       .start()
+
+  /** One micro-batch of [[maintainCellOccupancy]]: its cell state folds into
+    * the occupancy state at `path` ([[graft.sources.Versioned.foldBatch]]).
+    * Returns the committed row count. */
+  private[graft] def foldCellOccupancyBatch(batch: DataFrame,
+                                            cents: Array[graft.ext.Similarity.Cent],
+                                            path: String, batchId: Long): Long =
+    graft.sources.Versioned.foldBatch(path, batchId,
+      graft.ext.Similarity.cellState(batch, cents), graft.ext.Similarity.mergeCellStates)
+
+  /** One micro-batch of [[maintainCmsGrid]]: its bigram grid folds
+    * cell-wise into the grid at `path` ([[graft.sources.Versioned.foldBatch]]).
+    * Returns the committed row count. */
+  private[graft] def foldCmsBatch(batch: DataFrame, path: String, batchId: Long): Long =
+    graft.sources.Versioned.foldBatch(path, batchId,
+      graft.ext.Text.cmsCountersOf(graft.ext.Text.cmsKeyCountsOf(batch)),
+      graft.ext.Text.mergeCmsGrids)
 
   // --------------------- streaming IMAGE near-dup ingest (phash gate) ----
 
@@ -1272,99 +1299,5 @@ object Streams {
     for (subdir <- Seq("release", "versions");
          (b, dir) <- batchDirs(subdir) if !(b == -(gen + 1) || b > upTo))
       fs.delete(dir, true)
-  }
-
-  /** True iff `batchId` is already part of the state at `path`. Streaming
-    * foreachBatch ids are MONOTONICALLY increasing, so the committed tag's
-    * id is the high-water mark: any batchId at or below it has been folded
-    * (the additive merges would silently double-count on a re-fold). This
-    * covers not just structured streaming's last-batch replay but a direct
-    * caller replaying an ARBITRARY older batch (ADVICE r9) — O(1), no tag
-    * history scan. */
-  private def alreadyFolded(spark: SparkSession, path: String,
-                            batchId: Long): Boolean =
-    graft.sources.Versioned.latestTag(spark, path).exists { t =>
-      t.startsWith("batch=") &&
-        scala.util.Try(t.stripPrefix("batch=").trim.toLong)
-          .toOption.exists(batchId <= _)
-    }
-
-  /** One micro-batch of [[maintainCmsGrid]] — same replay discipline as
-    * [[foldCellOccupancyBatch]] (the grid is additive; a double fold would
-    * inflate every estimate). */
-  private[graft] def foldCmsBatch(batch: DataFrame, path: String,
-                                  batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    import graft.sources.Versioned
-    import graft.ext.Text
-    if (alreadyFolded(spark, path, batchId)) return
-    val delta = Text.cmsCountersOf(Text.cmsKeyCountsOf(batch))
-    val merged = Versioned.latestVersion(spark, path) match {
-      case Some(_) =>
-        Text.mergeCmsGrids(Seq(Versioned.read(spark, path), delta))
-      case None => delta
-    }
-    Versioned.write(merged, path, Some(s"batch=$batchId"))
-    ()
-  }
-
-  /** One micro-batch of [[maintainCellOccupancy]] — same replay discipline
-    * as [[foldMonthlyRevenueBatch]]. */
-  private[graft] def foldCellOccupancyBatch(batch: DataFrame,
-                                            cents: Array[graft.ext.Similarity.Cent],
-                                            path: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    import graft.sources.Versioned
-    import graft.ext.Similarity
-    if (alreadyFolded(spark, path, batchId)) return
-    val delta = Similarity.cellState(batch, cents)
-    val merged = Versioned.latestVersion(spark, path) match {
-      case Some(_) =>
-        Similarity.mergeCellStates(Seq(Versioned.read(spark, path), delta))
-      case None => delta
-    }
-    Versioned.write(merged, path, Some(s"batch=$batchId"))
-    ()
-  }
-
-  /** One micro-batch of [[maintainStats]] — same replay discipline as
-    * [[foldMonthlyRevenueBatch]]. */
-  private[graft] def foldStatsBatch(batch: DataFrame, table: String,
-                                    cols: Seq[String], path: String,
-                                    batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    import graft.sources.Versioned
-    import graft.ext.Sketch
-    if (alreadyFolded(spark, path, batchId)) return
-    // one fused pass over the batch; the zero states keep every column
-    // present when the batch is empty
-    val delta = Seq(Sketch.statsStates(batch, table, cols),
-      Sketch.zeroStatesFor(spark, cols.map(table -> _)))
-    val merged = Sketch.mergeStatsStates(
-      Versioned.latestVersion(spark, path).map(_ => Versioned.read(spark, path)).toSeq ++ delta)
-    Versioned.write(merged, path, Some(s"batch=$batchId"))
-    ()
-  }
-
-  /** One micro-batch of [[maintainMonthlyRevenue]], EXACTLY-ONCE: folding
-    * the same batch twice would double-count its revenue (merge is
-    * additive), so each fold commits its batch id as the version's tag —
-    * the pointer swap inside [[graft.sources.Versioned.write]] is the
-    * atomic commit point, and a replay sees its own id on the current
-    * version and no-ops. A crash BEFORE the swap leaves the old pointer, so
-    * the replay refolds from the old state: also correct. */
-  private[graft] def foldMonthlyRevenueBatch(batch: DataFrame, path: String,
-                                             batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    import graft.sources.Versioned
-    if (alreadyFolded(spark, path, batchId)) return
-    val delta = graft.engine.Incremental.monthlyRevenueState(batch)
-    val merged = Versioned.latestVersion(spark, path) match {
-      case Some(_) => graft.engine.Incremental.merge(
-        Seq(Versioned.read(spark, path), delta))
-      case None => delta
-    }
-    Versioned.write(merged, path, Some(s"batch=$batchId"))
-    ()
   }
 }

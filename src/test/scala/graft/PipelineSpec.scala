@@ -6,6 +6,17 @@ import graft.sources.Schemas
 
 class PipelineSpec extends SparkSpec {
 
+  /** Every file under `dir` but the pointer files, by relative path. */
+  private def filesUnder(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.contains("_LATEST"))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
   test("sales pipeline runs all stages, partitions order_details by year") {
     val out = Files.createTempDirectory("graft_pipe").toString
     val results = Pipeline.runSalesAnalytics(spark, sf, out)
@@ -28,7 +39,8 @@ class PipelineSpec extends SparkSpec {
     // literals, so even freshness hours agree).
     val auditNames = Seq("orders", "customer", "lineitem", "part",
       "order_details", "customer_orders")
-    val dq = graft.engine.Quality.overWarehouse(spark, out, auditNames)
+    val dq = graft.engine.Quality.allFamiliesOver(
+      graft.engine.Quality.warehouseTables(t => spark.read.parquet(s"$out/$t")), auditNames)
     val dqPlan = dq.queryExecution.executedPlan.toString
     assert(!dqPlan.contains("Window"), "DQ stage re-derived silver:\n" + dqPlan.take(800))
     val audited = dq.collect()
@@ -429,9 +441,9 @@ class PipelineSpec extends SparkSpec {
     val written = Option(new java.io.File(out).list()).toSeq.flatten
     assert(written.contains("bronze_supplier") && written.contains("silver_supplier_parts"),
       written.sorted)
-    // one 30 s retry delay (bronze_orders' own, beside stats_profile's), not
-    // one more per reader
-    assert(seconds < 60, s"supplier run took $seconds s")
+    // no 30 s retry delay: the missing input fails bronze_orders (and
+    // stats_profile) at once, and its readers never start
+    assert(seconds < 30, s"supplier run took $seconds s")
   }
 
   test("a stage frame that resolves a table missing from its reads fails, naming " +
@@ -456,10 +468,11 @@ class PipelineSpec extends SparkSpec {
     import graft.sources.Versioned
     val out = Files.createTempDirectory("graft_incr").toString
     val o = graft.engine.Sources.orders(spark, sf).cache()
+    // 460 / 465 / 575 of the fixture's 1,500 orders (1995-01-01 .. 2001-08-01)
     val slices = Seq(
-      col("o_orderdate") < lit("1995-01-01"),
-      col("o_orderdate") >= lit("1995-01-01") && col("o_orderdate") < lit("1997-01-01"),
-      col("o_orderdate") >= lit("1997-01-01"))
+      col("o_orderdate") < lit("1997-01-01"),
+      col("o_orderdate") >= lit("1997-01-01") && col("o_orderdate") < lit("1999-01-01"),
+      col("o_orderdate") >= lit("1999-01-01"))
     def assertSetEqual(a: org.apache.spark.sql.DataFrame,
                        b: org.apache.spark.sql.DataFrame, what: String): Unit = {
       assert(a.count() === b.count(), s"$what: row counts differ")
@@ -520,17 +533,7 @@ class PipelineSpec extends SparkSpec {
     val stores = Seq("state_monthly_revenue", "state_customer_profile")
     val committed = stores.map(s => Versioned.latestVersion(spark, s"$out/$s"))
     assert(committed.forall(_.contains(2)), committed)
-    // every file but the pointer files, by path relative to `out`
-    def state(): Map[String, Seq[Byte]] = {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(out)
-      val walk = Files.walk(root)
-      try walk.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.contains("_LATEST"))
-        .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
-      finally walk.close()
-    }
-    val before = state()
+    val before = filesUnder(out)
     // batch 1's pointer swaps wrote the complete `_LATEST.tmp` and deleted
     // `_LATEST`, then the process died before the rename
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -540,11 +543,51 @@ class PipelineSpec extends SparkSpec {
       assert(fs.delete(new Path(s"$out/$s", "_LATEST"), false))
     }
     assert(stores.map(s => Versioned.latestVersion(spark, s"$out/$s")) === committed)
-    // the replayed batch sees its own commit tag and folds nothing
+    // the replayed batch is at the committed batch id and folds nothing
     val replay = Pipeline.runSalesIncrement(spark, o.where(!early), out, 1L)
     assert(replay.forall(_.rows == 0L), replay.mkString("; "))
     assert(stores.map(s => Versioned.latestVersion(spark, s"$out/$s")) === committed)
-    assert(state() === before, "replay changed the state files")
+    assert(filesUnder(out) === before, "replay changed the state files")
+  }
+
+  test("replaying an older batch folds nothing in every batch mode: no new version, " +
+      "and the state and feed bytes are unchanged") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.ext.{Sampling, Sketch}
+    import graft.sources.Versioned
+    // fold batches 0 and 1, then replay batch 0
+    def replay(states: Seq[String])(fold: (Int, String) => Seq[Pipeline.StageResult]): Unit = {
+      val out = Files.createTempDirectory("graft_replay").toString
+      Seq(0, 1).foreach(b => assert(fold(b, out).forall(r => r.status == "PASS" && r.rows > 0)))
+      val versions = states.map(s => Versioned.latestVersion(spark, s"$out/$s"))
+      assert(versions.forall(_.contains(2)), versions)
+      val before = filesUnder(out)
+      val rs = fold(0, out)
+      assert(rs.forall(_.rows == 0L), rs.mkString("; "))
+      assert(states.map(s => Versioned.latestVersion(spark, s"$out/$s")) === versions)
+      val after = filesUnder(out)
+      def feeds(files: Map[String, Seq[Byte]]) = files.filter(_._1.startsWith("cdf_"))
+      assert(feeds(after) === feeds(before), "replay rewrote a feed partition")
+      assert(after === before, "replay changed the state files")
+    }
+    val o = graft.engine.Sources.orders(spark, sf)
+    val orderSlices = Seq(col("o_orderdate") < lit("1997-01-01"),
+      col("o_orderdate") >= lit("1997-01-01") && col("o_orderdate") < lit("1999-01-01"))
+    replay(Seq("state_monthly_revenue", "state_customer_profile")) { (b, out) =>
+      Pipeline.runSalesIncrement(spark, o.where(orderSlices(b)), out, b.toLong)
+    }
+    val li = graft.engine.Bronze.lineitem(spark, sf)
+    replay(Seq("state_supplier_bridge")) { (b, out) =>
+      Pipeline.runSupplierIncrement(spark, li.where(col("l_orderkey") % 3 === b), sf, out, b.toLong)
+    }
+    def slice(t: String, b: Int): DataFrame = {
+      val (df, key) = Sketch.sliceSource(spark, sf, t)
+      df.where(pmod(Sampling.mixHash(coalesce(col(key), lit(-1L))), lit(3)) === b)
+    }
+    replay(Seq("state_table_stats")) { (b, out) =>
+      Pipeline.runStatsIncrement(spark, slice(_, b), out, b.toLong)
+    }
   }
 
   test("supplier incremental mode: folded bridge reproduces the full silver " +
@@ -699,6 +742,28 @@ class PipelineSpec extends SparkSpec {
       engine.Bronze.region(spark, sf)
     }
     assert(r.status === "PASS" && r.attempts === 3 && r.rows === 5)
+  }
+
+  test("an error no retry can mend fails the stage at once: a missing input path " +
+      "and an undeclared read cost one attempt and no retry delay") {
+    val out = Files.createTempDirectory("graft_fail_fast").toString
+    val cfg = engine.EngineConfig.defaults.copy(maxRetryAttempts = 3, retryDelaySeconds = 30)
+    val t0 = System.nanoTime()
+    val r = Pipeline.stage(spark, cfg, "bronze_missing", out) {
+      spark.read.parquet(s"$out/missing.parquet")
+    }
+    assert(r.status === "FAIL" && r.attempts === 1, r.toString)
+    assert(r.error.exists(_.contains("PATH_NOT_FOUND")), r.toString)
+    val t1 = System.nanoTime()
+    val e = intercept[RuntimeException] {
+      Pipeline.runStages(spark, cfg, out, "test", Seq(
+        Pipeline.Step("bronze_region", Nil, _ => engine.Bronze.region(spark, sf)),
+        Pipeline.Step("region_names", Seq("bronze_region"), t => t("bronze_nation"))))
+    }
+    assert(e.getMessage.contains("reads undeclared table 'bronze_nation'"), e.getMessage)
+    val t2 = System.nanoTime()
+    assert((t1 - t0) / 1e9 < 10, s"missing input took ${(t1 - t0) / 1e9} s")
+    assert((t2 - t1) / 1e9 < 20, s"undeclared read took ${(t2 - t1) / 1e9} s")
   }
 
   test("stage times out, cancels its job group, and records FAIL") {

@@ -57,7 +57,8 @@ class PlanSpec extends SparkSpec {
       base(n).write.parquet(s"$dir/${if (silver(n)) "silver" else "bronze"}_$n")
     }
     def scans(names: Seq[String]): Int =
-      "FileScan parquet".r.findAllIn(plan(Quality.overWarehouse(spark, dir, names))).length
+      "FileScan parquet".r.findAllIn(plan(Quality.allFamiliesOver(
+        Quality.warehouseTables(t => spark.read.parquet(s"$dir/$t")), names))).length
     // sales: 6 tables + the customer, orders and part key sets (19 scans when
     // every check family read its tables again)
     assert(scans(Seq("orders", "customer", "lineitem", "part",

@@ -963,9 +963,9 @@ class StreamingSpec extends SparkSpec {
     // monthly-revenue fold: refolding would double-count; the version tag
     // makes the replay a no-op
     val orders = graft.engine.Sources.orders(spark, sf)
-    Streams.foldMonthlyRevenueBatch(orders, s"$dir/state", 0L)
+    Incremental.foldMonthlyRevenue(orders, s"$dir/state", 0L)
     val v = Versioned.latestVersion(spark, s"$dir/state")
-    Streams.foldMonthlyRevenueBatch(orders, s"$dir/state", 0L) // crash-replay
+    Incremental.foldMonthlyRevenue(orders, s"$dir/state", 0L) // crash-replay
     assert(Versioned.latestVersion(spark, s"$dir/state") === v, "replay must not commit")
     val folded = Incremental.finalize(Versioned.read(spark, s"$dir/state"))
     val direct = Incremental.finalize(Incremental.monthlyRevenueState(orders))
@@ -980,10 +980,10 @@ class StreamingSpec extends SparkSpec {
     val cols = Seq("user_id", "value") // integer + cent-scaled double paths
     val a = ev.where(col("event_id") % 2 === 0)
     val b = ev.where(col("event_id") % 2 =!= 0)
-    Streams.foldStatsBatch(a, "events", cols, s"$dir/state", 0L)
-    Streams.foldStatsBatch(b, "events", cols, s"$dir/state", 1L)
+    Sketch.foldStats(spark, _ => a, cols.map("events" -> _), s"$dir/state", 0L)
+    Sketch.foldStats(spark, _ => b, cols.map("events" -> _), s"$dir/state", 1L)
     val v = Versioned.latestVersion(spark, s"$dir/state")
-    Streams.foldStatsBatch(b, "events", cols, s"$dir/state", 1L) // crash-replay
+    Sketch.foldStats(spark, _ => b, cols.map("events" -> _), s"$dir/state", 1L) // crash-replay
     assert(Versioned.latestVersion(spark, s"$dir/state") === v,
       "replay must not commit")
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
