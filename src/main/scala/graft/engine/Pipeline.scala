@@ -2,14 +2,12 @@ package graft.engine
 
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
-import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 import scala.concurrent.duration.{Duration, DurationDouble}
 import scala.concurrent.{Await, Future, blocking}
 import scala.concurrent.ExecutionContext.Implicits.global
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
-import graft.sources.{Sinks, Versioned}
+import graft.sources.{Parquet, Sinks, Versioned}
 
 /** Pipeline orchestrator — the reference's `run_sales_analytics` /
   * `run_supplier_analytics` entry points (reference:
@@ -59,36 +57,6 @@ object Pipeline {
   def batchId(now: ZonedDateTime = ZonedDateTime.now(ZoneOffset.UTC)): String =
     "batch_" + now.format(DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss"))
 
-  /** Write `frame` and return the row count from the write-side task metrics
-    * (`outputMetrics.recordsWritten`) instead of re-scanning the output —
-    * at 100 TB the old read-back count was a full second pass per stage.
-    * Only tasks of the jobs in job group `group` count: other stages write
-    * at the same time. */
-  private def writeCounted(frame: DataFrame, group: String, path: String,
-                           partitionBy: Seq[String]): Long = {
-    val sc = frame.sparkSession.sparkContext
-    val rows = new AtomicLong
-    // touched only by the listener bus thread
-    val ownStages = mutable.Set.empty[Int]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          ownStages ++= js.stageIds
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null && ownStages(te.stageId))
-          rows.addAndGet(m.outputMetrics.recordsWritten)
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      Sinks.snapshotOverwrite(frame, path, partitionBy)
-      // listener delivery is asynchronous; drain before reading the counter
-      org.apache.spark.graft.SparkBridge.drainListeners(sc)
-      rows.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Run `body` bounded by `seconds`, cancelling the stage's job group on
     * timeout so its in-flight Spark jobs are actually killed. `body` waits on
     * Spark jobs, which Spark does not mark `blocking`, so it is marked here:
@@ -120,9 +88,11 @@ object Pipeline {
   }
 
   /** One pipeline stage: evaluate `df` (re-evaluated per attempt), write it,
-    * count rows from write metrics. Retries with delay, bounded by the stage
-    * timeout; after the last failed attempt — or the first, when the error
-    * is [[permanent]] — it records FAIL with the error. */
+    * count the rows the write wrote ([[Parquet.countedWrite]]; at 100 TB a
+    * read-back count would be a full second pass per stage). Retries with
+    * delay, bounded by the stage timeout; after the last failed attempt — or
+    * the first, when the error is [[permanent]] — it records FAIL with the
+    * error. */
   def stage(spark: SparkSession, cfg: EngineConfig, name: String,
             out: String, partitionBy: Seq[String] = Nil)(df: => DataFrame): StageResult = {
     val t0 = System.nanoTime()
@@ -130,7 +100,7 @@ object Pipeline {
     def attempt(n: Int): StageResult =
       try {
         val rows = withTimeout(spark, name, cfg.stageTimeoutSeconds) {
-          writeCounted(df, name, s"$out/$name", partitionBy)
+          Parquet.countedWrite(df)(Sinks.snapshotOverwrite(_, s"$out/$name", partitionBy))
         }
         StageResult(name, "PASS", (System.nanoTime() - t0) / 1e9, rows, None, n)
       } catch {
@@ -165,7 +135,7 @@ object Pipeline {
     for (s <- steps) {
       val inputs = s.reads.map(ended)
       val read: String => DataFrame = t =>
-        if (s.reads.contains(t)) spark.read.parquet(s"$outDir/$t")
+        if (s.reads.contains(t)) Parquet.read(spark, s"$outDir/$t")
         else throw new UndeclaredRead(s"stage '${s.name}' reads undeclared table '$t'")
       ended(s.name) = Future.sequence(inputs).map(_.find(_.status == "FAIL") match {
         case Some(in) =>
@@ -261,9 +231,8 @@ object Pipeline {
     var published = StageResult(feed, "PASS", 0.0, 0L)
     val folded = timed(stage)(Versioned.foldBatch(s"$outDir/$state", batchId, delta, merge,
       (head, merged) => published = timed(feed) {
-        Cdf.diff(finalize(head.getOrElse(delta.limit(0))), finalize(merged), keys)
-          .write.mode("overwrite").parquet(part)
-        delta.sparkSession.read.parquet(part).count()
+        Parquet.countedWrite(Cdf.diff(finalize(head.getOrElse(delta.limit(0))),
+          finalize(merged), keys))(_.write.mode("overwrite").parquet(part))
       }))
     Seq(published, folded.copy(seconds = folded.seconds - published.seconds))
   }

@@ -13,11 +13,14 @@ import org.apache.spark.sql.functions._
   * At 100 TB these scans are the widest point of every plan: each loader
   * returns a plain file-source DataFrame so Catalyst's column pruning and
   * filter pushdown reach the parquet reader (verify with
-  * `.explain("formatted")` → `PushedFilters` / `ReadSchema`).
+  * `.explain("formatted")` → `PushedFilters` / `ReadSchema`). Each scan
+  * goes through [[graft.sources.Parquet.read]], which reads the file's
+  * schema from its footer on the driver, so building a loader's frame runs
+  * no Spark job.
   */
 object Sources {
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Parquet.read(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "nation")

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * StreamingSpec).
   *
   * On-disk layout: ONE logical table at `fps/` — subdirs
-  * `fps/modality=<m>/batch=<b>/` — so `spark.read.parquet("<store>/fps")`
+  * `fps/modality=<m>/batch=<b>/` — so a parquet read of `<store>/fps`
   * yields the full (media_id, fp, modality, batch) frame via ordinary
   * partition discovery. The catalog addresses it as one bucketed external
   * table PER modality (location `fps/modality=<m>`, PARTITIONED BY (batch),

@@ -146,7 +146,7 @@ object MediaLake {
   def packedScan(spark: SparkSession, packedRoot: String,
                  modality: String): Dataset[Multimodal.MediaFile] = {
     import spark.implicits._
-    spark.read.parquet(s"$packedRoot/$modality").as[Multimodal.MediaFile]
+    graft.sources.Parquet.read(spark, s"$packedRoot/$modality").as[Multimodal.MediaFile]
   }
 
   /** The (session, corpus)-memoized packed lake: built from [[sessionLake]]

@@ -336,7 +336,7 @@ object Text {
     cmsCellsOf(tc).groupBy("r", "bucket").agg(sum(col("c")).as("cnt"))
 
   /** Cell-wise sum of sketch grids — the fold
-    * [[graft.streaming.Streams.maintainCmsGrid]] applies per micro-batch
+    * [[graft.streaming.Streams.foldCmsBatch]] applies per batch
     * (sparse representation: an absent cell is zero, so a plain union+agg
     * IS the cell-wise sum). */
   private[graft] def mergeCmsGrids(grids: Seq[DataFrame]): DataFrame =
@@ -385,7 +385,7 @@ object Text {
     * pattern of [[TextIndex.sessionStore]]: built (one corpus pass) at most
     * once per session, reused across sessions via the version log. The
     * stored table is EXACTLY the state [[graft.streaming.Streams
-    * .maintainCmsGrid]] maintains per micro-batch (StreamingSpec pins
+    * .foldCmsBatch]] maintains per batch (StreamingSpec pins
     * streamed == from-scratch cell-for-cell), so a corpus streamed through
     * the fold is already queryable by [[cmsIndexed]] with no batch build. */
   private[graft] def sessionCmsGrid(spark: SparkSession, dir: String): String = {

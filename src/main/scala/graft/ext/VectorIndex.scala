@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.engine.Sources
+import graft.sources.Parquet
 import Similarity._
 
 /** Persisted, incrementally-maintainable ANN index — the two-level IVF
@@ -184,11 +185,11 @@ object VectorIndex {
     * loaded model assigns bit-identically to the in-memory one. */
   private[graft] def loadModel(spark: SparkSession,
                                storePath: String): (Array[Cent], DataFrame, Int) = {
-    val l1 = spark.read.parquet(s"$storePath/l1").select("cl", "cv", "cnorm")
+    val l1 = Parquet.read(spark, s"$storePath/l1").select("cl", "cv", "cnorm")
       .collect()
       .map(r => Cent(r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-    val subs = spark.read.parquet(s"$storePath/subs").select("l1", "cl", "cv", "cnorm")
-    val nProbe = spark.read.parquet(s"$storePath/meta").select("n_probe").head().getInt(0)
+    val subs = Parquet.read(spark, s"$storePath/subs").select("l1", "cl", "cv", "cnorm")
+    val nProbe = Parquet.read(spark, s"$storePath/meta").select("n_probe").head().getInt(0)
     (l1, subs, nProbe)
   }
 
@@ -310,7 +311,7 @@ object VectorIndex {
       val live = batchDirs(subdir).filter { case (b, _) => b == -gen || b > ceil }
       val doomed = live.filter { case (b, _) => b <= upTo || b == -gen }
       if (doomed.nonEmpty) {
-        val consolidated = spark.read.parquet(doomed.map(_._2.toString): _*)
+        val consolidated = Parquet.read(spark, doomed.map(_._2.toString): _*)
           .select(cols.map(col) :+ lit(-(gen + 1)).as("batch"): _*)
         graft.sources.DynamicOverwrite(spark) {
           consolidated.write.mode("overwrite").insertInto(tbl)

@@ -106,7 +106,7 @@ object VectorIndexPq {
     * (≤ PqSub·PqCodes rows); codes are dense 1-based per subspace exactly
     * as [[Pq.pqCodebooksLocal]] emits them. */
   private[graft] def loadBooks(spark: SparkSession, storePath: String): Pq.Books = {
-    val rows = spark.read.parquet(s"$storePath/books")
+    val rows = graft.sources.Parquet.read(spark, s"$storePath/books")
       .select("s", "code", "cw").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     Array.tabulate(Pq.PqSub) { s =>

@@ -22,7 +22,7 @@ object Catalog {
         case "events" => Sources.events(spark, dir)
         case "orders" => Sources.orders(spark, dir)
         case "lineitem" => Sources.lineitem(spark, dir)
-        case other => spark.read.parquet(s"$dir/$other.parquet")
+        case other => Parquet.read(spark, s"$dir/$other.parquet")
       }
       df.createOrReplaceTempView(t)
     }

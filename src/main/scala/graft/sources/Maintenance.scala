@@ -53,9 +53,9 @@ object Maintenance {
     val df =
       if (files.isEmpty) // schema-preserving empty relation: any file, false filter
         stats.select("file").limit(1).collect().headOption
-          .map(r => spark.read.parquet(r.getString(0)).where(lit(false)))
+          .map(r => Parquet.read(spark, r.getString(0)).where(lit(false)))
           .getOrElse(spark.emptyDataFrame)
-      else spark.read.parquet(files: _*)
+      else Parquet.read(spark, files: _*)
     (files, df.where(col(c) >= lo && col(c) <= hi))
   }
 

@@ -10,10 +10,12 @@ import org.apache.spark.sql.types._
   * [[Schemas.createEmpty]] / [[Schemas.ensure]] are the idempotent
   * "create if not exists" twins for a path-based lake).
   *
-  * Why explicit schemas at 100 TB: scans pin their read schema instead of
-  * inferring from footers (a full file listing + footer read per query),
-  * writers validate shape drift before commit, and streaming sources
-  * (readStream needs a schema upfront) share the same constants.
+  * Who reads with these constants: the csv/json scans (inference there is
+  * a full extra pass) and the streaming source (readStream needs a schema
+  * upfront). Parquet scans do not: the raw files store what the catalog
+  * declares as DATE as timestamps, and `events.ts` in two physical forms,
+  * so [[Parquet.read]] takes each scan's schema from one footer, on the
+  * driver, and [[graft.engine.Sources]] casts at the scan.
   */
 object Schemas {
 

@@ -50,7 +50,7 @@ object Sinks {
 
   /** Read a [[mergeKeepLatest]] snapshot without its internal layout column. */
   def readMerged(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("_bucket")
+    Parquet.read(spark, path).drop("_bucket")
 
   /** Upsert `updates` into the snapshot at `path`: per `keys`-tuple keep the
     * row with the highest `seqCol` (ties → incoming batch wins).
@@ -79,7 +79,7 @@ object Sinks {
     val all = if (fs.exists(target)) {
       // control-plane metadata: ≤ MergeBuckets ints, not data
       val touched = up.select("_bucket").distinct().collect().map(_.getInt(0))
-      spark.read.parquet(path)
+      Parquet.read(spark, path)
         .where(col("_bucket").isin(touched.map(Integer.valueOf).toSeq: _*))
         .withColumn("_src", lit(0))
         .unionByName(up)

@@ -77,23 +77,24 @@ object Versioned {
   /** Write `df` as the next version and move the pointer. Returns the new
     * version number. Versions allocate past ALL existing history, so a write
     * after a rollback never clobbers the rolled-back-from versions. */
-  def write(df: DataFrame, path: String): Int = commit(df, path, None)
+  def write(df: DataFrame, path: String): Int = commit(df, path, None)._1
 
   /** [[write]], recording `batch` as the version's `_TAG` (`batch=<n>`)
     * INTO the version directory before the pointer swap, so the swap — the
     * atomic commit point — commits the data and its batch id together.
-    * Delta's commitInfo, minimally. */
-  private def commit(df: DataFrame, path: String, batch: Option[Long]): Int = {
+    * Delta's commitInfo, minimally. Returns the version and the rows it
+    * holds, counted on the write. */
+  private def commit(df: DataFrame, path: String, batch: Option[Long]): (Int, Long) = {
     val spark = df.sparkSession
     val next = maxExisting(spark, path) + 1
-    df.write.mode("errorifexists").parquet(s"$path/v=$next")
+    val rows = Parquet.countedWrite(df)(_.write.mode("errorifexists").parquet(s"$path/v=$next"))
     val f = fs(spark, path)
     batch.foreach { b =>
       val out = f.create(new Path(s"$path/v=$next", "_TAG"), true)
       try out.write(s"batch=$b".getBytes("UTF-8")) finally out.close()
     }
     swapPointer(f, path, next)
-    next
+    (next, rows)
   }
 
   /** The batch id the CURRENT (pointer) version committed. A version with
@@ -137,9 +138,7 @@ object Versioned {
       val merged = head.fold(delta)(h => merge(Seq(h, delta))).persist()
       try {
         publish(head, merged)
-        val rows = merged.count()
-        commit(merged, path, Some(batchId))
-        rows
+        commit(merged, path, Some(batchId))._2
       } finally merged.unpersist()
     }
   }
@@ -148,7 +147,7 @@ object Versioned {
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, path))
       .getOrElse(sys.error(s"no committed version at $path"))
-    spark.read.parquet(s"$path/v=$v")
+    Parquet.read(spark, s"$path/v=$v")
   }
 
   /** Roll the pointer back (or forward) to an existing version — data-free,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.engine.Num._
+import graft.sources.Parquet
 
 /** Structured Streaming incrementalization of the engine.
   *
@@ -406,7 +407,7 @@ object Streams {
     // the dedup gate's own durable output is the batch's kept partition —
     // reading it back (not re-deriving) keeps scrub/dedup/score agreeing
     // byte-for-byte on replay
-    val kept = spark.read.parquet(s"$storePath/dedup/kept/batch=$batchId")
+    val kept = Parquet.read(spark, s"$storePath/dedup/kept/batch=$batchId")
     val lm = Text.lmScoreWith(kept, lmModel, lmUnk)
       .select(col("doc_id"), col("n_scored_tokens"), col("cross_entropy"),
         col("perplexity"), col("is_lm_outlier"))
@@ -558,7 +559,7 @@ object Streams {
       spark.catalog.recoverPartitions(tbl)
       if (legacy) {
         graft.sources.DynamicOverwrite(spark) {
-          spark.read.parquet(legacyDir.toString)
+          Parquet.read(spark, legacyDir.toString)
             .select("doc_id", "band", "bucket", "batch") // insertInto is positional
             .write.mode("overwrite").insertInto(tbl)
         }
@@ -586,7 +587,7 @@ object Streams {
       .where(col("batch") =!= batchId).drop("batch")
     val histDocs =
       if (!seen) batch.limit(0)
-      else spark.read.parquet(s"$storePath/docs")
+      else Parquet.read(spark, s"$storePath/docs")
         .where(col("batch") =!= batchId).drop("batch")
     // candidate = new doc (right) colliding with ANY lower-id doc seen so
     // far: history ⋈ batch + batch ⋈ batch (within-batch dups count too),
@@ -915,27 +916,6 @@ object Streams {
       }
       .start()
 
-  /** Streaming COUNT-MIN maintenance — the live half of
-    * [[graft.ext.Text.cmsHeavyHitters]]'s sketch: each micro-batch's
-    * bigram counts fold CELL-WISE into a versioned
-    * CmsDepth×CmsWidth grid (the sketch is additive — DedupSpec pins
-    * sketch(A∪B) = sketch(A)+sketch(B)), so n-gram heavy-hitter estimates
-    * stay queryable ([[graft.ext.Text.cmsEstimateOver]]) at O(batch) work
-    * per micro-batch + O(d·w) constant state — never a corpus rescan, and
-    * the corpus itself need not be retained. Exactly-once by
-    * [[graft.sources.Versioned.foldBatch]]'s commit rule (a replayed batch
-    * must not double-fold an additive state). */
-  def maintainCmsGrid(docs: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldCmsBatch(batch, path, batchId)
-        ()
-      }
-      .start()
-
   /** One micro-batch of [[maintainCellOccupancy]]: its cell state folds into
     * the occupancy state at `path` ([[graft.sources.Versioned.foldBatch]]).
     * Returns the committed row count. */
@@ -945,9 +925,17 @@ object Streams {
     graft.sources.Versioned.foldBatch(path, batchId,
       graft.ext.Similarity.cellState(batch, cents), graft.ext.Similarity.mergeCellStates)
 
-  /** One micro-batch of [[maintainCmsGrid]]: its bigram grid folds
-    * cell-wise into the grid at `path` ([[graft.sources.Versioned.foldBatch]]).
-    * Returns the committed row count. */
+  /** COUNT-MIN maintenance — the live half of
+    * [[graft.ext.Text.cmsHeavyHitters]]'s sketch: a batch's bigram counts
+    * fold CELL-WISE into the versioned CmsDepth×CmsWidth grid at `path`
+    * (the sketch is additive — DedupSpec pins sketch(A∪B) =
+    * sketch(A)+sketch(B)), so n-gram heavy-hitter estimates stay queryable
+    * ([[graft.ext.Text.cmsEstimateOver]]) at O(batch) work per batch +
+    * O(d·w) constant state — never a corpus rescan. A stream calls it from
+    * `foreachBatch`, like [[maintainCellOccupancy]]. Exactly-once by
+    * [[graft.sources.Versioned.foldBatch]]'s commit rule (a replayed batch
+    * must not double-fold an additive state). Returns the committed row
+    * count. */
   private[graft] def foldCmsBatch(batch: DataFrame, path: String, batchId: Long): Long =
     graft.sources.Versioned.foldBatch(path, batchId,
       graft.ext.Text.cmsCountersOf(graft.ext.Text.cmsKeyCountsOf(batch)),
@@ -1178,7 +1166,7 @@ object Streams {
     // partition (keep-lowest: a doc's verdict is final at its own batch)
     def rejectsOf(keptDir: String, idCol: String): DataFrame =
       scrubbed.select("doc_id").join(
-        spark.read.parquet(s"$storePath/$keptDir/batch=$batchId")
+        Parquet.read(spark, s"$storePath/$keptDir/batch=$batchId")
           .select(col(idCol).as("doc_id")), Seq("doc_id"), "left_anti")
     val dupped = rejectsOf("dedup/kept", "doc_id")
       .unionByName(rejectsOf("media/kept/modality=image", "media_id"))
@@ -1220,7 +1208,7 @@ object Streams {
     val st = graft.ext.VectorIndex.compactState(spark, storePath)
     upTo.foreach(v => require(v > st._1,
       s"release version $v is below the retention floor ${st._1} (vacuumed)"))
-    val rel = spark.read.parquet(s"$storePath/release")
+    val rel = Parquet.read(spark, s"$storePath/release")
       .where(graft.ext.VectorIndex.livePred(st))
     upTo.map(v => rel.where(col("batch") <= v)).getOrElse(rel)
       .select("doc_id", "lang", "source", "n_contaminated", "contaminated")
@@ -1279,7 +1267,7 @@ object Streams {
     // 1a. consolidate release rows (previous consolidated partition folds in)
     val doomedRel = liveRel.filter { case (b, _) => b <= upTo || b == -gen }
     if (doomedRel.nonEmpty)
-      spark.read.parquet(doomedRel.map(_._2.toString): _*)
+      Parquet.read(spark, doomedRel.map(_._2.toString): _*)
         .write.mode("overwrite")
         .parquet(s"$storePath/release/batch=${-(gen + 1)}")
     // 1b. consolidate the version log, materializing each row's version id
@@ -1287,7 +1275,7 @@ object Streams {
       .filter { case (b, _) => (b == -gen || b > ceil) && (b <= upTo || b == -gen) }
     if (doomedVer.nonEmpty)
       doomedVer.map { case (b, p) =>
-        val df = spark.read.parquet(p.toString)
+        val df = Parquet.read(spark, p.toString)
         if (df.columns.contains("version")) df.select("version", "n_released")
         else df.select(lit(b).as("version"), col("n_released"))
       }.reduce(_ unionByName _)

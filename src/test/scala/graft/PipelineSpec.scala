@@ -527,8 +527,10 @@ class PipelineSpec extends SparkSpec {
     import graft.sources.Versioned
     val out = Files.createTempDirectory("graft_crash").toString
     val o = graft.engine.Sources.orders(spark, sf)
-    val early = col("o_orderdate") < lit("1995-01-01")
-    Pipeline.runSalesIncrement(spark, o.where(early), out, 0L)
+    // both slices hold orders (the fixture's start on 1995-01-01)
+    val early = col("o_orderdate") < lit("1997-01-01")
+    val first = Pipeline.runSalesIncrement(spark, o.where(early), out, 0L)
+    assert(first.forall(_.rows > 0), first.mkString("; "))
     Pipeline.runSalesIncrement(spark, o.where(!early), out, 1L)
     val stores = Seq("state_monthly_revenue", "state_customer_profile")
     val committed = stores.map(s => Versioned.latestVersion(spark, s"$out/$s"))
@@ -548,6 +550,27 @@ class PipelineSpec extends SparkSpec {
     assert(replay.forall(_.rows == 0L), replay.mkString("; "))
     assert(stores.map(s => Versioned.latestVersion(spark, s"$out/$s")) === committed)
     assert(filesUnder(out) === before, "replay changed the state files")
+  }
+
+  test("fold stages count rows on their writes: every stage's rows equal its " +
+      "committed version's count, and every feed stage's its feed partition's") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.Versioned
+    val out = Files.createTempDirectory("graft_fold_rows").toString
+    val o = graft.engine.Sources.orders(spark, sf)
+    val li = graft.engine.Bronze.lineitem(spark, sf)
+    Seq(0L, 1L).foreach { b =>
+      val rs = Pipeline.runSalesIncrement(spark, o.where(col("o_orderkey") % 2 === b), out, b) ++
+        Pipeline.runSupplierIncrement(spark, li.where(col("l_orderkey") % 2 === b), sf, out, b)
+      assert(rs.map(_.stage).toSet === Set("incr_monthly_revenue", "cdf_customer_profile",
+        "incr_customer_profile", "cdf_supplier_parts", "incr_supplier_bridge"))
+      rs.foreach { r =>
+        val written =
+          if (r.stage.startsWith("cdf_")) spark.read.parquet(s"$out/${r.stage}/batch=$b")
+          else Versioned.read(spark, s"$out/state_${r.stage.stripPrefix("incr_")}")
+        assert(r.rows > 0 && r.rows === written.count(), s"batch $b: $r")
+      }
+    }
   }
 
   test("replaying an older batch folds nothing in every batch mode: no new version, " +
